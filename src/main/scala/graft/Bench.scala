@@ -55,17 +55,6 @@ object Bench {
       case None    => inOrder
     }
 
-    // Every interpolated string (sfDir, query names, error messages)
-    // rides this before landing in a JSON line: quotes, backslashes AND
-    // control characters (\r, \t, a multi-line path…) — one malformed
-    // bench_meta line would cost the whole artifact.
-    def jesc(s: String): String = s.flatMap {
-      case '\\'           => "\\\\"
-      case '"'            => "\\\""
-      case c if c < ' '   => f"\\u${c.toInt}%04x"
-      case c              => c.toString
-    }
-
     import java.lang.management.ManagementFactory
     def gcMsNow(): Long = {
       import scala.jdk.CollectionConverters._
@@ -119,8 +108,8 @@ object Bench {
     val errors = all.collect { case (k, Left(m)) => (k, m) }
     val results = all.collect { case (k, Right(v)) => (k, v) }
     val qs = all.map {
-      case (k, Right(v)) => "\"" + jesc(k) + "\":" + v.sec
-      case (k, Left(_))  => "\"" + jesc(k) + "\":\"err\""
+      case (k, Right(v)) => Json.str(k) + ":" + v.sec
+      case (k, Left(_))  => Json.str(k) + ":\"err\""
     }.mkString("{", ",", "}")
     val total = results.map(_._2.sec).sum
     val gcTotal = results.map(_._2.gcMs).sum
@@ -132,15 +121,15 @@ object Bench {
     outPath.foreach { p =>
       val w = new java.io.PrintWriter(p)
       try {
-        w.println(s"""{"metric":"bench_meta","sf":"${jesc(sfDir)}","cpus":$cpus,"seed":$seedJson,"n_queries":${results.size},"n_errors":${errors.size},"total_sec":$total,"gc_ms":$gcTotal,"cpu_s":$cpuTotal}""")
+        w.println(s"""{"metric":"bench_meta","sf":${Json.str(sfDir)},"cpus":$cpus,"seed":$seedJson,"n_queries":${results.size},"n_errors":${errors.size},"total_sec":$total,"gc_ms":$gcTotal,"cpu_s":$cpuTotal}""")
         all.zipWithIndex.foreach {
           case ((k, Right(v)), i) => w.println(String.format(
             java.util.Locale.ROOT,
             """{"q":"%s","pos":%d,"sec":%.3f,"gc_ms":%d,"cpu_ms":%d}""",
-            jesc(k), Int.box(i), Double.box(v.sec), Long.box(v.gcMs),
+            Json.escape(k), Int.box(i), Double.box(v.sec), Long.box(v.gcMs),
             Long.box(v.cpuMs)))
           case ((k, Left(m)), i) => w.println(
-            s"""{"q":"${jesc(k)}","pos":$i,"err":"${jesc(m)}"}""")
+            s"""{"q":${Json.str(k)},"pos":$i,"err":${Json.str(m)}}""")
         }
       } finally w.close()
     }
@@ -157,7 +146,7 @@ object Bench {
     //  3. the short final headline (metric "total" — the key the driver
     //     parses) with suite gc/cpu totals, the shuffle seed, and the
     //     earliest 7 full-name timings as a cross-check.
-    println(s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"errors":${errors.size},"sf":"${jesc(sfDir)}"}""")
+    println(s"""{"metric":"total_full","value":$total,"unit":"sec","queries":$qs,"errors":${errors.size},"sf":${Json.str(sfDir)}}""")
     val shortKey = "^(q[0-9]+).*$".r
     val grouped = all.map { case (k, ev) =>
       val sk = k match { case shortKey(p) => p; case _ => k }
@@ -165,19 +154,19 @@ object Bench {
         // Locale.ROOT: the f-interpolator uses the JVM default locale, and
         // a comma-decimal locale (de_DE etc.) would corrupt the JSON
         case Right(v) => String.format(java.util.Locale.ROOT,
-          "\"%s\":[%.3f,%d]", jesc(sk), Double.box(v.sec), Long.box(v.gcMs))
-        case Left(_) => "\"" + jesc(sk) + "\":\"err\""
+          "\"%s\":[%.3f,%d]", Json.escape(sk), Double.box(v.sec), Long.box(v.gcMs))
+        case Left(_) => Json.str(sk) + ":\"err\""
       }
     }.grouped(13).toSeq
     grouped.zipWithIndex.foreach { case (g, i) =>
       println(s"""{"metric":"qtimes","part":${i + 1},"parts":${grouped.size},"queries":${g.mkString("{", ",", "}")}}""")
     }
     errors.foreach { case (k, m) =>
-      println(s"""{"metric":"qerror","query":"${jesc(k)}","err":"${jesc(m)}"}""")
+      println(s"""{"metric":"qerror","query":${Json.str(k)},"err":${Json.str(m)}}""")
     }
-    val head = results.take(7).map { case (k, v) => "\"" + jesc(k) + "\":" + v.sec }
+    val head = results.take(7).map { case (k, v) => Json.str(k) + ":" + v.sec }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"gc_ms":$gcTotal,"cpu_s":$cpuTotal,"seed":$seedJson,"sf":"${jesc(sfDir)}","head_queries":$head}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"gc_ms":$gcTotal,"cpu_s":$cpuTotal,"seed":$seedJson,"sf":${Json.str(sfDir)},"head_queries":$head}""")
     // 4. one best-effort per-query DELTA line vs the newest committed
     //    isolated record (BENCH_r*_local*.json in the working dir):
     //    the driver keeps only the stdout tail, which truncated the
@@ -214,12 +203,12 @@ object Bench {
             .take(10).map { case (k, p, n) =>
               val sk = k match { case shortK(x) => x; case _ => k }
               String.format(java.util.Locale.ROOT,
-                "\"%s\":[%.3f,%.3f]", jesc(sk), Double.box(p),
+                "\"%s\":[%.3f,%.3f]", Json.escape(sk), Double.box(p),
                 Double.box(n))
             }.mkString("{", ",", "}")
           println(String.format(java.util.Locale.ROOT,
             """{"metric":"delta_vs_prev","prev":"%s","n_common":%d,"geomean_speedup":%.4f,"top_moves":%s}""",
-            jesc(pf.getName), Int.box(common.size), Double.box(geo), top))
+            Json.escape(pf.getName), Int.box(common.size), Double.box(geo), top))
         }
       }
     }

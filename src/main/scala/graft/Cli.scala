@@ -25,13 +25,9 @@ object Cli {
   private def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       String.valueOf(Runtime.getRuntime.availableProcessors()))
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    GraftSession.create(
+      master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
+      shufflePartitions = Some(cpus.trim.toInt))
   }
 
   private val booleanFlags = Set("once", "gzip")

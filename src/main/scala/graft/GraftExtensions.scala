@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions._
+import graft.replicate.LocalCheckpointFileManager
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
@@ -27,8 +28,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
 }
 
-/** Convenience builder: a session with graft extensions, UTC, sane local
-  * shuffle partitions, AQE on.
+/** The session builder for graft's entry points (`Cli`, ScaleCheck,
+  * PlanAudit, the benchmark): graft extensions, UTC, shuffle partitions =
+  * cores (or `shufflePartitions`), AQE on, no web UI (the stats server is
+  * the control surface), and [[graft.replicate.LocalCheckpointFileManager]]
+  * as the streaming checkpoint file manager, so replicate queries on local
+  * checkpoint directories commit their offset and commit logs without
+  * starting a process (non-local schemes keep Spark's default manager).
   */
 object GraftSession {
   def create(master: String = "local[*]",
@@ -41,6 +47,8 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", parts)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .config(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
       .getOrCreate()
     graft.functions.registerAll(spark) // cover getOrCreate of an existing session
     spark

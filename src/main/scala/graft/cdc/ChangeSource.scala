@@ -108,6 +108,15 @@ object ReplicatePipeline {
     * fails the micro-batch instead, so the parity hook is per-batch:
     * `onError` fires with (batchId, error) before the failure propagates,
     * and the batch retries under the stream's at-least-once contract.
+    *
+    * Commit path: before each batch the stream writes its offset-log entry
+    * (`walCommit`), and after `writeBatch` returns its commit-log entry
+    * (`commitOffsets`); both sit on the commit-to-ack critical path and go
+    * through the session's checkpoint file manager. Under
+    * [[graft.GraftSession.create]] that is
+    * [[graft.replicate.LocalCheckpointFileManager]], which commits a local
+    * `checkpointDir` without starting a process; other schemes keep
+    * Spark's default manager.
     */
   def startWithDeliveryReports(frame: DataFrame,
       writeBatch: (DataFrame, Long) => Unit,

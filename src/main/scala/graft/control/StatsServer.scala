@@ -1,6 +1,7 @@
 package graft.control
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import graft.Json
 import graft.replicate.ReplicatorRegistry
 
 import java.net.InetSocketAddress
@@ -14,11 +15,21 @@ import java.nio.charset.StandardCharsets
   *
   * Built on the JDK's HttpServer — no extra dependency, driver-side only
   * (never on the executor path).
+  *
+  * `start()` sets `sun.net.httpserver.nodelay=true` unless it is already
+  * set. The JDK server writes a response's headers and body as two
+  * segments; without TCP_NODELAY, Nagle holds the body until the headers
+  * are acknowledged, and a keep-alive client that delays its ACK waits
+  * ~40 ms per GET. The JDK reads the property once, in `ServerConfig`'s
+  * static initializer, i.e. at the JVM's first `HttpServer.create`: a
+  * server created earlier by other code fixes the setting for the JVM.
   */
 class StatsServer(port: Int) {
   private var server: HttpServer = _
 
   def start(): Int = {
+    val noDelay = "sun.net.httpserver.nodelay"
+    if (System.getProperty(noDelay) == null) System.setProperty(noDelay, "true")
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/api/v1/replicators", new Handler)
     // bare liveness probe (reference internal/archiver/handlers.go:9-14):
@@ -42,18 +53,6 @@ class StatsServer(port: Int) {
 
   def stop(): Unit = if (server != null) server.stop(0)
 
-  /** JSON string escape for interpolated text (error messages etc.). */
-  private def jstr(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   private class Handler extends HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
       val path = ex.getRequestURI.getPath.stripPrefix("/api/v1/replicators")
@@ -69,27 +68,27 @@ class StatsServer(port: Int) {
           case ("GET", id :: Nil) =>
             ReplicatorRegistry.get(id) match {
               case Some(r) => respond(ex, 200, r.stateJson)
-              case None    => respond(ex, 404, s"""{"error":${jstr(s"unknown replicator: $id")}}""")
+              case None    => respond(ex, 404, s"""{"error":${Json.str(s"unknown replicator: $id")}}""")
             }
           case ("POST", id :: action :: Nil) =>
             ReplicatorRegistry.get(id) match {
-              case None => respond(ex, 404, s"""{"error":${jstr(s"unknown replicator: $id")}}""")
+              case None => respond(ex, 404, s"""{"error":${Json.str(s"unknown replicator: $id")}}""")
               case Some(r) =>
                 action match {
                   case "pause"   => r.pause(); respond(ex, 200, r.stateJson)
                   case "resume"  => r.resume(); respond(ex, 200, r.stateJson)
                   case "stop"    => r.stop(); respond(ex, 200, r.stateJson)
                   case "restart" => r.restart(); respond(ex, 200, r.stateJson)
-                  case other => respond(ex, 400, s"""{"error":${jstr(s"unknown action: $other")}}""")
+                  case other => respond(ex, 400, s"""{"error":${Json.str(s"unknown action: $other")}}""")
                 }
             }
           case _ => respond(ex, 405, """{"error":"method not allowed"}""")
         }
       } catch {
         case e: IllegalStateException =>
-          respond(ex, 409, s"""{"error":${jstr(e.getMessage)}}""")
+          respond(ex, 409, s"""{"error":${Json.str(e.getMessage)}}""")
         case e: Throwable =>
-          respond(ex, 500, s"""{"error":${jstr(e.getMessage)}}""")
+          respond(ex, 500, s"""{"error":${Json.str(e.getMessage)}}""")
       }
     }
 

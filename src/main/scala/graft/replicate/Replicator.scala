@@ -1,5 +1,6 @@
 package graft.replicate
 
+import graft.Json
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.apache.spark.sql.SparkSession
 
@@ -34,17 +35,6 @@ class ReplicatorStats {
     lastError.set(s"batch $batchId: $msg")
   }
 
-  /** JSON string escape — exception messages carry quotes/backslashes/
-    * control chars that would otherwise corrupt the stats payload.
-    */
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   /** Frozen at stop time — a stopped replicator's uptime must not keep
     * climbing.
     */
@@ -70,7 +60,7 @@ class ReplicatorStats {
     val tgt =
       s"""{"total_events":${totalEvents.get},"connection_healthy":$healthy,
          |"write_error_count":${writeErrors.get},
-         |"last_error":"${jsonEscape(lastError.get)}",
+         |"last_error":${Json.str(lastError.get)},
          |"last_write_at":"${iso(lastEventAtMs.get)}"}""".stripMargin.replace("\n", "")
     val repl =
       s"""{"started_at":"${iso(startedAtMs.get)}","uptime_seconds":${uptimeMs / 1000},

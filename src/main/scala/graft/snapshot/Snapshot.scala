@@ -1,5 +1,6 @@
 package graft.snapshot
 
+import graft.Json
 import graft.config.GraftConfig
 import graft.model.Catalog
 import graft.schema.FieldSpec
@@ -195,7 +196,7 @@ object Archiver {
   private def writeCatalog(c: Catalog, dest: String, spark: SparkSession): Unit = {
     val json =
       s"""{"id":"${c.id}","start_time_ms":${c.startTimeMs},"end_time_ms":${c.endTimeMs},
-         |"source":${jsonStr(c.source)},"num_source_records":${c.numSourceRecords},
+         |"source":${Json.str(c.source)},"num_source_records":${c.numSourceRecords},
          |"num_records_processed":${c.numRecordsProcessed},"success":${c.success}}""".stripMargin.replace("\n", "")
     if (dest.startsWith("s3a://") || dest.startsWith("hdfs://")) {
       // route through Hadoop FS so the same code works on object stores
@@ -213,13 +214,4 @@ object Archiver {
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     }
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }
