@@ -28,8 +28,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
 }
 
-/** The session builder for graft's entry points (`Cli`, ScaleCheck,
-  * PlanAudit, the benchmark): graft extensions, UTC, shuffle partitions =
+/** The one session builder for graft's entry points (`Cli`, `Bench`,
+  * `Verify`, ScaleCheck): graft extensions, UTC, shuffle partitions =
   * cores (or `shufflePartitions`), AQE on, no web UI (the stats server is
   * the control surface), and [[graft.replicate.LocalCheckpointFileManager]]
   * as the streaming checkpoint file manager, so replicate queries on local

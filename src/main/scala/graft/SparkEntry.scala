@@ -536,6 +536,16 @@ object SparkEntry {
        |  WHERE hw.t < ${t0 - 1})""".stripMargin
   }
 
+  /** The named [[queries]], in the given order. Any unknown name fails
+    * here, before a query runs: a typo must not yield a silently empty
+    * timing or dump. */
+  def pick(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    names.map(n => n -> all(n))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ================= reference surface (librarian §2.1-2.8) =============

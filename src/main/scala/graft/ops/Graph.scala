@@ -16,11 +16,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * transpose aggregation (sum contributions by dst) is the unavoidable
   * per-iteration shuffle, sized by nodes, not edges, after partial
   * aggregation. Rank lineage is cut with an eager localCheckpoint every
-  * `checkpointEvery` iterations — the standard guard against the
-  * exponential-plan blowup of iterative DataFrame algorithms. Dangling
-  * mass (nodes with no out-edges) redistributes uniformly, so total
-  * rank stays exactly 1 and fixed-iteration results are comparable
-  * across engines.
+  * iteration — the standard guard against the exponential-plan blowup
+  * of iterative DataFrame algorithms. Dangling mass (nodes with no
+  * out-edges) redistributes uniformly, so total rank stays exactly 1
+  * and fixed-iteration results are comparable across engines.
   */
 object Graph {
 
@@ -105,10 +104,9 @@ object Graph {
     *         sum(pr) == 1 up to float addition
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, damping: Double = 0.85,
-      checkpointEvery: Int = 2): DataFrame =
+      iterations: Int, damping: Double = 0.85): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, None, iterations, damping,
-      checkpointEvery, tolerance = 0.0)
+      tolerance = 0.0)
 
   /** Personalized (seeded) PageRank — TrustRank's machinery (Gyöngyi,
     * Garcia-Molina & Pedersen 2004): teleport mass lands ONLY on the
@@ -128,9 +126,9 @@ object Graph {
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, seedCol: String, iterations: Int,
-      damping: Double = 0.85, checkpointEvery: Int = 2): DataFrame =
+      damping: Double = 0.85): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, None, iterations, damping,
-      checkpointEvery, tolerance = 0.0, seeds = Some((seeds, seedCol)))
+      tolerance = 0.0, seeds = Some((seeds, seedCol)))
 
   /** Weighted PageRank: contributions split proportionally to edge
     * weight instead of uniformly over out-edges (`outdeg` becomes the
@@ -139,19 +137,19 @@ object Graph {
     * reading; dropping them silently would desynchronize `nodes`.
     */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, iterations: Int, damping: Double = 0.85,
-      checkpointEvery: Int = 2): DataFrame =
+      weightCol: String, iterations: Int, damping: Double = 0.85): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, Some(weightCol), iterations, damping,
-      checkpointEvery, tolerance = 0.0)
+      tolerance = 0.0)
 
   /** Tolerance-stopped PageRank: iterate until the L1 rank delta
     * `sum |pr_i - pr_{i-1}|` falls below `tolerance` (or `maxIterations`
     * is hit). The delta rides the SAME job that materializes the new
     * rank frame — an `observe()` metric on the checkpoint pass, exactly
     * the CC convergence-probe pattern (ops/Dedup.scala) — so the stop
-    * check adds zero extra scans; the price is a checkpoint every
-    * iteration, which the fixed-iteration path only pays every
-    * `checkpointEvery`.
+    * check adds zero extra scans; the price is the previous rank joined
+    * into every iteration's checkpoint pass, and a checkpoint on the
+    * final iteration too, which the fixed-iteration path leaves to the
+    * caller's action.
     */
   def pageRankConverged(edges: DataFrame, srcCol: String, dstCol: String,
       tolerance: Double, maxIterations: Int = 50, damping: Double = 0.85,
@@ -162,13 +160,12 @@ object Graph {
         "checkpoints every iteration, so a runaway tolerance is bounded " +
         "by this cap rather than by wall-clock")
     pageRankImpl(edges, srcCol, dstCol, weightCol, maxIterations, damping,
-      checkpointEvery = 1, tolerance = tolerance)
+      tolerance = tolerance)
   }
 
   private def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String], iterations: Int, damping: Double,
-      checkpointEvery: Int, tolerance: Double,
-      seeds: Option[(DataFrame, String)] = None): DataFrame = {
+      tolerance: Double, seeds: Option[(DataFrame, String)] = None): DataFrame = {
     require(iterations >= 1 && iterations <= 100,
       "pageRank: iterations must be in [1,100]")
     require(damping > 0 && damping < 1, "pageRank: damping must be in (0,1)")

@@ -570,10 +570,6 @@ object Retrieval {
       .select(ks ++ (1 to n).map(i => col(s"__p.w$i").as(s"w$i")): _*)
   }
 
-  /** Back-compat alias: the bigram stream is [[ngramPairs]] at n=2. */
-  private[graft] def bigramPairs(df: DataFrame, keep: Seq[String],
-      textCol: String): DataFrame = ngramPairs(df, keep, textCol, 2)
-
   /** (keep-cols..., w1..wn) PADDED n-gram stream: one row per token
     * position, history slots before the doc start carried as NULL —
     * so every lower-order gram stream is a column-subset of this one

@@ -2,10 +2,11 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Minimal bridge into `private[sql]` Column internals — the supported
-  * pattern for third-party Catalyst extensions (Spark 4 moved Column onto
-  * ColumnNode; `classic.ExpressionUtils` is the conversion point). Only
-  * pure conversions live here; all graft logic stays in `graft.*`.
+/** Minimal bridge into `private[sql]`/`private[spark]` internals — the
+  * supported pattern for third-party Catalyst extensions (Spark 4 moved
+  * Column onto ColumnNode; `classic.ExpressionUtils` is the conversion
+  * point). Only thin wrappers live here; all graft logic stays in
+  * `graft.*`.
   */
 object GraftSqlShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -56,4 +57,15 @@ object GraftSqlShim {
       case _ => df
     }
   }
+
+  /** Block until every listener has seen every event posted so far (the
+    * `private[spark]` bus drain Spark's own tests use): the end of a
+    * job's scheduler events, a query's `QueryExecutionListener`
+    * callback. Delivery is asynchronous, so counters read right after an
+    * action can miss its tail. A bus still busy after 10 s leaves them
+    * short rather than failing the caller.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    try spark.sparkContext.listenerBus.waitUntilEmpty(10000L)
+    catch { case _: java.util.concurrent.TimeoutException => () }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * behavior. A refactor that silently loses a broadcast, reintroduces a
   * cartesian product, or drops parquet pushdown changes these plans long
   * before it changes sf0.01 results — so the shapes are asserted here,
-  * not just eyeballed via PlanAudit.
+  * not just eyeballed in `Bench --plans` dumps.
   */
 class PlanShapeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark

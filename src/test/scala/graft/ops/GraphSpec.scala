@@ -117,18 +117,6 @@ class GraphSpec extends AnyFunSuite {
       tolerance = 1e-9, maxIterations = 50).collect().isEmpty)
   }
 
-  test("checkpointed and un-checkpointed schedules agree") {
-    val edges = (0L until 200L).map(i => (i, (i * 7 + 3) % 50))
-    val a = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst",
-      iterations = 6, checkpointEvery = 2)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val b = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst",
-      iterations = 6, checkpointEvery = 100)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(a.keySet == b.keySet)
-    a.foreach { case (k, v) => assert(math.abs(v - b(k)) < 1e-12) }
-  }
-
   test("triangle count: K4 has 4, plus a pendant and noise edges") {
     // K4 on {1,2,3,4} (4 triangles), pendant 4-5, disconnected 6-7
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
