@@ -244,7 +244,8 @@ object Bench {
     scala.util.Try {
       val files = Option(new java.io.File(".").listFiles()).toSeq.flatten
         .map(_.toPath)
-      baselineRecord(files, outPath.map(Paths.get(_))).foreach { pf =>
+      baselineRecord(files, outPath.map(Paths.get(_)), sfDir,
+          spark.sparkContext.defaultParallelism).foreach { pf =>
         val rx = """"q":"([^"]+)".*?"sec":([0-9.eE+-]+)""".r
         val prev = Files.readAllLines(pf).asScala
           .flatMap(l => rx.findFirstMatchIn(l)
@@ -279,20 +280,26 @@ object Bench {
 
   private val localRecord = "BENCH_r(\\d+)_local\\.json".r
   /** The `delta_vs_prev` baseline among `files`: the highest-round
-    * in-order isolated record `BENCH_r<N>_local.json`, never `self` (the
-    * run's own `--out` file, which would compare the run with itself).
-    * Chosen by round, not mtime: the newest file is often a pre-change or
-    * shuffled-order record (`_pre_local`, `_local_seed7`), and the r19
-    * delta line read a seed-7 record as its baseline. */
-  private[graft] def baselineRecord(files: Seq[Path],
-      self: Option[Path]): Option[Path] = {
+    * in-order isolated record `BENCH_r<N>_local.json` measured at the
+    * same scale and core count (its first-line `bench_meta` carries this
+    * run's `sf` and `cpus`), never `self` (the run's own `--out` file,
+    * which would compare the run with itself). Chosen by round, not
+    * mtime: the newest file is often a pre-change or shuffled-order
+    * record (`_pre_local`, `_local_seed7`), and the r19 delta line read
+    * a seed-7 record as its baseline. No matching record: no delta. */
+  private[graft] def baselineRecord(files: Seq[Path], self: Option[Path],
+      sf: String, cpus: Int): Option[Path] = {
     def key(p: Path) = p.toAbsolutePath.normalize
+    def sameSetup(p: Path) = scala.util.Using(Files.newBufferedReader(p))(r =>
+      Option(r.readLine()).exists(m => m.contains("\"metric\":\"bench_meta\"") &&
+        m.contains(s"\"sf\":${Json.str(sf)},") && m.contains(s"\"cpus\":$cpus,"))
+    ).getOrElse(false)
     files.filterNot(f => self.exists(key(_) == key(f)))
       .flatMap(f => f.getFileName.toString match {
         case localRecord(n) => Some(n.toInt -> f)
         case _              => None
       })
-      .maxByOption(_._1).map(_._2)
+      .sortBy(-_._1).map(_._2).find(sameSetup)
   }
 
   /** PlanAudit's marker row over the plans one query executed: shuffles

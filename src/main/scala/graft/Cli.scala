@@ -1,6 +1,6 @@
 package graft
 
-import graft.cdc.{FileChangeSource, ReplicatePipeline}
+import graft.cdc.{Envelope, ReplicatePipeline}
 import graft.config.GraftConfig
 import graft.control.StatsServer
 import graft.replicate.{Replicator, ReplicatorRegistry}
@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   * (SURVEY.md §3):
   *
   *   graft.Cli snapshot -c config.yml [--id ID]
-  *   graft.Cli replicate --source <dir> --target <dir> --id <ID>
-  *       --checkpoint <dir> [--port N] [--once]
+  *   graft.Cli replicate --source postgres://…|mongodb://…
+  *       --target kafka://host:port/topic --id <ID> --checkpoint <dir>
+  *       [--port N] [--once]
   *   graft.Cli schema-generate --ddl "CREATE TABLE ..."
   *
   * `replicate --once` drains all available input and exits (offline/test
@@ -59,6 +60,89 @@ object Cli {
   private def splitCols(s: String): Seq[String] =
     s.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
 
+  /** `replicate` on a caller-owned session (the reference's URL form,
+    * `replicate.go:82-120`): the `--source` scheme picks the DSv2 source,
+    * whose changes become Debezium envelopes named `--id` and go to
+    * `--target` over [[ReplicatePipeline.startToKafkaWire]], resuming from
+    * `--checkpoint`. `--id` also keys the source's transport/cursor
+    * registry. Flags are checked before any query starts; the running
+    * replicator is registered with the control plane. */
+  def startReplicator(spark: SparkSession, flags: Map[String, String]): Replicator = {
+    def req(k: String) = flags.getOrElse(k,
+      throw new IllegalArgumentException(s"replicate: missing --$k"))
+    val id = req("id")
+    val (provider, connector, options) = replicateSource(req("source"), id)
+    val (host, port, topic) = kafkaTarget(req("target"))
+    val checkpoint = req("checkpoint")
+    lazy val repl: Replicator = new Replicator(id, spark, s =>
+      ReplicatePipeline.startToKafkaWire(Envelope.toKafkaFrame(
+          s.readStream.format(provider).options(options).load(), connector, id),
+        host, port, topic, checkpoint,
+        onError = (b, e) => repl.stats.recordWriteError(b, e)))
+    ReplicatorRegistry.register(repl)
+    repl.start()
+    repl
+  }
+
+  /** A `--source`/`--target` URL and its (percent-decoded) query; a
+    * query key outside `known` or a missing host is rejected. */
+  private def replicateUrl(flag: String, url: String,
+      known: Set[String]): (java.net.URI, Map[String, String]) = {
+    val u = new java.net.URI(url)
+    val query = Option(u.getQuery).toSeq.flatMap(_.split("&")).filter(_.nonEmpty)
+      .map(_.split("=", 2)).map(kv => kv(0) -> kv.lift(1).getOrElse("")).toMap
+    query.keys.find(!known(_)).foreach(k => throw new IllegalArgumentException(
+      s"replicate: unknown query key '$k' in --$flag $url"))
+    require(u.getHost != null, s"replicate: --$flag $url names no host")
+    (u, query)
+  }
+
+  /** `--source` -> (DSv2 provider, envelope connector, stream options):
+    * `postgres://user:pw@host:port/db?slot=…&publication=…` maps onto
+    * [[graft.sources.PgOutputWalClient]]'s `pg.*` options,
+    * `mongodb://user:pw@host:port/db?collection=…` onto
+    * [[graft.sources.ChangeStreamTokenClient]]'s `mongo.*` options. */
+  private[graft] def replicateSource(url: String,
+      id: String): (String, String, Map[String, String]) = {
+    def options(prefix: String, known: Set[String], defaultPort: Int,
+        fixed: (String, String)*): Map[String, String] = {
+      val (u, query) = replicateUrl("source", url, known)
+      val userInfo = Option(u.getUserInfo).toSeq.flatMap(_.split(":", 2))
+      fixed.toMap ++ Map(s"$prefix.host" -> u.getHost, s"$prefix.port" ->
+          (if (u.getPort >= 0) u.getPort else defaultPort).toString) ++
+        Seq(s"$prefix.user", s"$prefix.password").zip(userInfo) ++
+        Option(u.getPath).map(_.stripPrefix("/")).filter(_.nonEmpty)
+          .map(s"$prefix.database" -> _) ++
+        query.map { case (k, v) => s"$prefix.$k" -> v }
+    }
+    Option(new java.net.URI(url).getScheme).getOrElse("") match {
+      case "postgres" =>
+        ("graft.sources.CdcSourceProvider", "postgresql",
+          options("pg", Set("slot", "publication"), 5432, "pg.transport.id" -> id,
+            "wal.client" -> "graft.sources.PgOutputWalClient"))
+      case "mongodb" =>
+        val opts = options("mongo", Set("collection"), 27017, "stream.cursor.id" -> id,
+          "stream.client" -> "graft.sources.ChangeStreamTokenClient")
+        require(opts.contains("mongo.collection"),
+          s"replicate: --source $url names no ?collection=")
+        ("graft.sources.TokenStreamProvider", "mongodb", opts)
+      case other => throw new IllegalArgumentException(
+        s"replicate: unknown --source scheme '$other' in $url (postgres|mongodb)")
+    }
+  }
+
+  /** `--target kafka://host:port/topic` -> (host, port, topic). */
+  private[graft] def kafkaTarget(url: String): (String, Int, String) = {
+    val scheme = new java.net.URI(url).getScheme
+    require(scheme == "kafka",
+      s"replicate: unknown --target scheme '$scheme' in $url (kafka)")
+    val (u, _) = replicateUrl("target", url, known = Set.empty)
+    val topic = Option(u.getPath).getOrElse("").stripPrefix("/")
+    require(topic.nonEmpty,
+      s"replicate: --target $url names no topic (kafka://host:port/topic)")
+    (u.getHost, if (u.getPort >= 0) u.getPort else 9092, topic)
+  }
+
   def main(args: Array[String]): Unit = args.toList match {
     case "snapshot" :: rest =>
       val flags = parseFlags(rest)
@@ -77,17 +161,11 @@ object Cli {
 
     case "replicate" :: rest =>
       val flags = parseFlags(rest)
-      def req(k: String) = flags.getOrElse(k, sys.error(s"replicate: missing --$k"))
       val spark = session()
       spark.sparkContext.setLogLevel("WARN")
-      val id = req("id")
-      val repl = new Replicator(id, spark, s =>
-        ReplicatePipeline.startToParquet(
-          FileChangeSource(req("source")), s,
-          flags.getOrElse("connector", "postgres"), id,
-          req("target"), req("checkpoint")))
-      ReplicatorRegistry.register(repl)
-      repl.start()
+      val repl =
+        try startReplicator(spark, flags)
+        catch { case e: Throwable => spark.stop(); throw e }
       if (flags.contains("once")) {
         repl.processAllAvailable()
         repl.stop()
@@ -96,7 +174,7 @@ object Cli {
       } else {
         val server = new StatsServer(flags.getOrElse("port", "8080").toInt)
         val port = server.start()
-        println(s"""{"id":"$id","control":"http://localhost:$port/api/v1/replicators"}""")
+        println(s"""{"id":"${repl.id}","control":"http://localhost:$port/api/v1/replicators"}""")
         sys.addShutdownHook { server.stop(); spark.stop() }
         spark.streams.awaitAnyTermination()
       }
@@ -1058,7 +1136,8 @@ object Cli {
         s"""unknown command: ${other.headOption.getOrElse("")}
            |usage:
            |  snapshot -c <config.yml> [--id ID]
-           |  replicate --source <dir> --target <dir> --id <ID> --checkpoint <dir> [--port N] [--once]
+           |  replicate --source postgres://u:pw@host/db?slot=s&publication=p|mongodb://u:pw@host/db?collection=c
+           |         --target kafka://host:9092/topic --id <ID> --checkpoint <dir> [--port N] [--once]
            |  schema-generate --ddl "CREATE TABLE ..."
            |  fixtures --records N --out <dir>
            |  curate --in <sfdir> --table documents --out <dir>

@@ -1,28 +1,21 @@
 package graft.cdc
 
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Streaming change sources. The reference's `Source` interface
-  * (`pkg/replicator/replicator.go:46-51`) is a pull-based `Next()`;
-  * Spark-first that becomes "produce a streaming DataFrame of raw change
-  * rows" — offsets/resume are the stream's own (checkpointLocation), which
-  * subsumes the reference's LSN/resume-token bookkeeping (SURVEY.md ST3/ST6).
+/** The raw-change row contract every CDC source emits (the DSv2
+  * [[graft.sources.CdcSourceProvider]] and
+  * [[graft.sources.TokenStreamProvider]]) and [[Envelope]] consumes.
+  * Offsets and resume are the stream's own (`checkpointLocation`), which
+  * subsumes the reference's LSN/resume-token bookkeeping (SURVEY.md
+  * ST3/ST6):
   *
-  * Raw-change row contract (consumed by [[Envelope]]):
   *   db, schema, table: String     — identity of the changed relation
   *   op: String                    — c|u|d|r (or source-native, map first)
   *   ts_ms: Long                   — source event time, epoch millis
   *   before, after: Map[String,String] — images (null per op semantics)
   *   lsn, txId: Long               — source positions (0 when N/A)
-  *
-  * The real PG-pgoutput / Mongo change-stream connectors are network
-  * clients that cannot run in this offline environment; the JSON-lines
-  * file source below is the deterministic double that exercises every
-  * downstream stage (envelope, sink, checkpoint/resume, control plane)
-  * through public APIs only.
   */
 object ChangeSource {
   val rawSchema: StructType = StructType(Seq(
@@ -37,69 +30,13 @@ object ChangeSource {
     StructField("txId", LongType)))
 }
 
-trait ChangeSource {
-  /** A STREAMING DataFrame of raw change rows (ChangeSource.rawSchema). */
-  def changes(spark: SparkSession): DataFrame
-}
-
-/** Deterministic file-backed change stream: JSON-lines files dropped into
-  * `dir` become micro-batches (`maxFilesPerTrigger` throttles). This is the
-  * offline stand-in for the PG/Mongo connectors.
-  */
-case class FileChangeSource(dir: String, maxFilesPerTrigger: Int = 10)
-    extends ChangeSource {
-  override def changes(spark: SparkSession): DataFrame =
-    spark.readStream
-      .schema(ChangeSource.rawSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dir)
-}
-
-/** End-to-end replicate-pipeline wiring: change source -> Debezium
-  * envelope -> sink. The Kafka shape matches the reference target
+/** End-to-end replicate-pipeline wiring: a raw-change stream, projected
+  * by [[Envelope.toKafkaFrame]], produced to Kafka over the library's own
+  * wire client. The Kafka shape matches the reference target
   * (`internal/integrations/kafka/repository.go`): key = db.schema.table,
-  * value = envelope JSON; producer tuning rides on `kafka.`-prefixed
-  * options (acks=1, linger.ms=5, batch.size=16384, snappy — the
-  * reference's defaults, BASELINE.md).
+  * value = envelope JSON, acks=1.
   */
 object ReplicatePipeline {
-
-  def envelopeFrame(source: ChangeSource, spark: SparkSession,
-      connector: String, name: String): DataFrame =
-    Envelope.toKafkaFrame(source.changes(spark), connector, name)
-
-  /** The reference target's producer tuning
-    * (`internal/integrations/kafka/repository.go:49-60`), expressed as the
-    * `kafka.`-prefixed options Spark's Kafka sink forwards to the
-    * producer. A first-class map so specs (and callers layering their own
-    * overrides — the reference lets URL query params override config,
-    * `repository.go:62-81`) see exactly what the sink gets.
-    */
-  def kafkaProducerOptions(brokers: String, topic: String,
-      overrides: Map[String, String] = Map.empty): Map[String, String] =
-    Map(
-      "kafka.bootstrap.servers" -> brokers,
-      "topic" -> topic,
-      "kafka.acks" -> "1",
-      "kafka.retries" -> "3",
-      "kafka.batch.size" -> "16384",
-      "kafka.linger.ms" -> "5",
-      "kafka.compression.type" -> "snappy",
-      "kafka.max.in.flight.requests.per.connection" -> "5",
-      "kafka.request.timeout.ms" -> "5000",
-      "kafka.delivery.timeout.ms" -> "10000") ++
-      overrides.map { case (k, v) =>
-        (if (k.startsWith("kafka.") || k == "topic") k else s"kafka.$k") -> v
-      }
-
-  /** Kafka sink writer (compiles offline; needs brokers to run). */
-  def kafkaWriter(frame: DataFrame, brokers: String, topic: String,
-      checkpointDir: String,
-      overrides: Map[String, String] = Map.empty): DataStreamWriter[Row] =
-    frame.writeStream
-      .format("kafka")
-      .options(kafkaProducerOptions(brokers, topic, overrides))
-      .option("checkpointLocation", checkpointDir)
 
   /** Per-batch delivery-report seam. The reference surfaces async produce
     * failures through a delivery-report loop that logs and counts them
@@ -181,19 +118,4 @@ object ReplicatePipeline {
       onError = onError,
       checkpointDir = checkpointDir,
       triggerMs = triggerMs)
-
-  /** File sink used offline (same envelope frame, parquet instead of
-    * Kafka) — lets tests and the archiver-to-lake path share wiring.
-    */
-  def startToParquet(source: ChangeSource, spark: SparkSession,
-      connector: String, name: String, outDir: String,
-      checkpointDir: String,
-      triggerMs: Long = 100L): StreamingQuery =
-    envelopeFrame(source, spark, connector, name)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .start()
 }

@@ -67,7 +67,7 @@ object Envelope {
 
   /** Project a raw change frame into the Kafka-ready (key, value) shape:
     * value = envelope JSON (T7, `internal/integrations/kafka/repository.go:143`).
-    * The result feeds `writeStream.format("kafka")` unchanged.
+    * The result feeds [[ReplicatePipeline.startToKafkaWire]] unchanged.
     */
   def toKafkaFrame(changes: DataFrame, connector: String, name: String): DataFrame = {
     val src = sourceMeta(connector, name,

@@ -1,60 +1,8 @@
 package graft.model
 
-/** Core data model of the engine — the Debezium-style CDC envelope, the
-  * checkpoint token, and the snapshot audit catalog.
-  *
-  * Shapes follow the reference's data model (see SURVEY.md §1.1):
-  * Event envelope `pkg/replicator/event.go:47-56`, payload `:30-37`,
-  * source metadata `:14-27`, operation codes `:6-11`, checkpoint
-  * `pkg/replicator/checkpoint.go:14-18`, catalog
-  * `internal/catalog/catalog.go:15-23`.
+/** Snapshot audit record, written as `catalog.json` next to the output
+  * (reference `internal/catalog/catalog.go:15-23`, SURVEY.md §1.1).
   */
-
-/** CDC operation codes (create / update / delete / snapshot-read). */
-object Op {
-  val Create = "c"
-  val Update = "u"
-  val Delete = "d"
-  val Read   = "r"
-  val all: Set[String] = Set(Create, Update, Delete, Read)
-}
-
-/** Source metadata block of the envelope. */
-case class SourceMeta(
-    version: String,
-    connector: String,
-    name: String,
-    ts_ms: Long,
-    snapshot: String,
-    db: String,
-    sequence: String,
-    schema: String,
-    table: String,
-    txId: Long,
-    lsn: Long)
-
-/** A change event with a schema-less interior: `before`/`after` are string
-  * maps (parity with the reference's PG text-protocol decode,
-  * `pkg/postgres/source.go:403-445`). Used as `Dataset[ChangeEvent]`.
-  *
-  * `position` is the source resume token (LSN / resume token), carried
-  * outside the serialized payload like the reference's `Position []byte`.
-  */
-case class ChangeEvent(
-    before: Option[Map[String, String]],
-    after: Option[Map[String, String]],
-    source: SourceMeta,
-    op: String,
-    ts_ms: Long,
-    position: Array[Byte])
-
-/** Checkpoint record — `{ReplicatorID, Position, Timestamp}`. */
-case class Checkpoint(
-    replicatorId: String,
-    position: Array[Byte],
-    timestampMs: Long)
-
-/** Snapshot audit record, written as `catalog.json` next to the output. */
 case class Catalog(
     id: String,
     startTimeMs: Long,

@@ -49,14 +49,15 @@ object Graph {
     * This replaces the former wedge pipeline (pivot self-join →
     * Bloom probe → closing equi-join on the edge set): the wedge
     * stream — Σ C(d⁺,2) rows, 34× the edge count on the co-purchase
-    * graph — never materializes, so its exchange, its per-row
-    * hash+Bloom work and the closing sort-merge join all disappear;
-    * what remains is two edge-sized array joins and a per-row
-    * intersect bounded by 2·d⁺_max = O(√m) (the degree-orientation
-    * rail), which AQE's skew splitting can divide freely because rows
-    * are independent. The neighbor-array frame is referenced twice in
-    * ONE plan, so exchange reuse dedups its aggregate (the kCore
-    * lesson) — no pin. */
+    * graph — never materializes as ROWS (its per-row hash+Bloom work
+    * and the closing sort-merge join are gone), but shuffle BYTES stay
+    * wedge-sized: the second array join ships N⁺(u) with every edge
+    * row, Σ d⁺(u)² elements. What remains is two edge-row array joins
+    * and a per-row intersect bounded by 2·d⁺_max = O(√m) (the
+    * degree-orientation rail), which AQE's skew splitting can divide
+    * freely because rows are independent. The neighbor-array frame is
+    * referenced twice in ONE plan, so exchange reuse dedups its
+    * aggregate (the kCore lesson) — no pin. */
   private def triangleCorners(oriented: DataFrame): DataFrame = {
     val arrs = oriented.groupBy(col("u"))
       .agg(sort_array(collect_list(col("v"))).as("__vs"))

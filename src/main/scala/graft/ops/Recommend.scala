@@ -206,12 +206,11 @@ object Recommend {
     // slice) instead of the rank window's exchange + full sort of the
     // candidate grain: ascending (−score, item) struct order IS
     // (score desc, item) — the window's exact pick, position = rank.
-    // Bounded: a user's candidate set is ≤ |history(u)| × k neighbor
-    // edges, so the per-group buffer is capped by the same rail that
-    // caps the scoring join's fan-out (unlike a per-ITEM top-k, where
-    // a celebrity item's full neighbor list would be unbounded —
-    // itemSimilarity keeps its spillable window for exactly that
-    // reason).
+    // NOT bounded: a user's candidate set is ≤ |history(u)| × k
+    // neighbor edges, and nothing caps |history(u)| (no rail like
+    // itemSimilarity's maxBasketSize), so one heavy user's candidates
+    // sit in a single in-memory aggregation buffer, where the rank
+    // window it replaced could spill.
     hist
       .join(edges, Seq("item"))
       .groupBy(col("user"), col("neighbor").as("item"))

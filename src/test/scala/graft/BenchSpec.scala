@@ -95,21 +95,38 @@ class BenchSpec extends AnyFunSuite {
 
   test("delta baseline: highest-round in-order local record, by round not mtime") {
     val dir = Files.createTempDirectory("bench-baseline")
-    def touch(name: String, mtime: Long): Path = {
-      val p = Files.writeString(dir.resolve(name), "{}\n")
+    def touch(name: String, mtime: Long, sf: String = "/data/sf0.1",
+        cpus: Int = 32): Path = {
+      val p = Files.writeString(dir.resolve(name),
+        s"""{"metric":"bench_meta","sf":"$sf","cpus":$cpus,"seed":null}""" + "\n" +
+          """{"q":"q15_sort_limit","pos":0,"sec":0.5}""" + "\n")
       Files.setLastModifiedTime(p, FileTime.fromMillis(mtime))
     }
+    def pick(files: Seq[Path], self: Option[Path] = None,
+        sf: String = "/data/sf0.1", cpus: Int = 32) =
+      Bench.baselineRecord(files, self, sf, cpus)
     val r18 = touch("BENCH_r18_local.json", 1000L)
     val r19 = touch("BENCH_r19_local.json", 2000L)
     touch("BENCH_r19_pre_local.json", 3000L)
     touch("BENCH_r19_local_seed7.json", 4000L)
     touch("BENCH_r19.json", 5000L)
+    // higher rounds measured at another scale / core count never qualify
+    touch("BENCH_r21_local.json", 500L, sf = "/data/sf0.001")
+    touch("BENCH_r22_local.json", 600L, cpus = 4)
     val files = Files.list(dir).iterator().asScala.toSeq
-    assert(Bench.baselineRecord(files, None).contains(r19))
+    assert(pick(files).contains(r19))
     // the run's own --out record never serves as its baseline
-    assert(Bench.baselineRecord(files, Some(r19)).contains(r18))
+    assert(pick(files, Some(r19)).contains(r18))
     val own = touch("BENCH_r20_local.json", 6000L)
-    assert(Bench.baselineRecord(files :+ own, Some(own)).contains(r19))
-    assert(Bench.baselineRecord(Seq(dir.resolve("BENCH_r19.json")), None).isEmpty)
+    assert(pick(files :+ own, Some(own)).contains(r19))
+    assert(pick(Seq(dir.resolve("BENCH_r19.json"))).isEmpty)
+    // the smoke run matches only its own setup; no match -> no delta
+    assert(pick(files, sf = "/data/sf0.001", cpus = 32)
+      .contains(dir.resolve("BENCH_r21_local.json")))
+    assert(pick(files, cpus = 4).contains(dir.resolve("BENCH_r22_local.json")))
+    assert(pick(files, sf = "/data/sf0.001", cpus = 4).isEmpty)
+    // a record without a bench_meta first line never qualifies
+    val bare = Files.writeString(dir.resolve("BENCH_r30_local.json"), "{}\n")
+    assert(pick(files :+ bare).contains(r19))
   }
 }

@@ -53,28 +53,36 @@ class ApplySpec extends AnyFunSuite {
       ("B", "b-v1", 2L, -1L, true)), s"got $out")
   }
 
+  /** A streaming raw-change frame over the in-memory WAL `walId`. */
+  private def walStream(walId: String) = spark.readStream
+    .format("graft.sources.CdcSourceProvider")
+    .option("wal.client", "graft.sources.InMemoryWalClient")
+    .option("wal.id", walId)
+    .load()
+
+  /** A users change at `lsn`; deletes carry only the before image (where
+    * the key lives), like pgoutput. */
+  private def walChange(walId: String, lsn: Long, op: String, id: String,
+      name: String): Unit =
+    InMemoryWal.append(walId, WalRecord(lsn, "db", "s", "users", op, lsn,
+      if (op == "d") Map("id" -> id) else null,
+      if (op == "d") null else Map("id" -> id, "name" -> name), lsn))
+
   test("streaming SCD2 materialization closes open tails across micro-batches") {
-    val inDir = Files.createTempDirectory("scd2-in").toString
+    val walId = "scd2-wal"
+    InMemoryWal.clear(walId)
     val tableDir = Files.createTempDirectory("scd2-t").toString + "/hist"
     val ckpt = Files.createTempDirectory("scd2-ck").toString
-    def line(lsn: Long, op: String, id: String, name: String): String = {
-      // deletes carry the before image (where the key lives), like pgoutput
-      val after = if (op == "d") "null" else s"""{"id":"$id","name":"$name"}"""
-      val before = if (op == "d") s"""{"id":"$id"}""" else "null"
-      s"""{"db":"db","schema":"s","table":"users","op":"$op","ts_ms":$lsn,""" +
-        s""""before":$before,"after":$after,"lsn":$lsn,"txId":$lsn}"""
-    }
-    val q = Apply.startScd2Materialize(spark,
-      FileChangeSource(inDir).changes(spark), "id", Seq("name"),
+    // batch 1: A created then updated; B created
+    walChange(walId, 1, "c", "A", "a-v1")
+    walChange(walId, 3, "u", "A", "a-v2")
+    walChange(walId, 2, "c", "B", "b-v1")
+    val q = Apply.startScd2Materialize(spark, walStream(walId), "id", Seq("name"),
       tableDir, ckpt, triggerMs = 50)
     try {
-      // batch 1: A created then updated; B created
-      Files.writeString(java.nio.file.Paths.get(inDir, "b0.json"),
-        Seq(line(1, "c", "A", "a-v1"), line(3, "u", "A", "a-v2"),
-          line(2, "c", "B", "b-v1")).mkString("\n"))
       q.processAllAvailable()
       // batch 2: A deleted (must close a-v2's OPEN tail from batch 1)
-      Files.writeString(java.nio.file.Paths.get(inDir, "b1.json"), line(5, "d", "A", null))
+      walChange(walId, 5, "d", "A", null)
       q.processAllAvailable()
 
       val hist = spark.read.parquet(tableDir)
@@ -94,19 +102,16 @@ class ApplySpec extends AnyFunSuite {
     // with a FRESH checkpoint against the already-materialized table —
     // the merge must be idempotent (no duplicate rows, no inverted
     // intervals from closing the batch's own versions)
-    val inDir = Files.createTempDirectory("scd2r-in").toString
+    val walId = "scd2r-wal"
+    InMemoryWal.clear(walId)
     val tableDir = Files.createTempDirectory("scd2r-t").toString + "/hist"
-    def line(lsn: Long, op: String, id: String, name: String): String =
-      s"""{"db":"db","schema":"s","table":"users","op":"$op","ts_ms":$lsn,""" +
-        s""""before":null,"after":{"id":"$id","name":"$name"},"lsn":$lsn,"txId":$lsn}"""
-    Files.writeString(java.nio.file.Paths.get(inDir, "b0.json"),
-      Seq(line(1, "c", "A", "a-v1"), line(3, "u", "A", "a-v2"),
-        line(2, "c", "B", "b-v1")).mkString("\n"))
+    walChange(walId, 1, "c", "A", "a-v1")
+    walChange(walId, 3, "u", "A", "a-v2")
+    walChange(walId, 2, "c", "B", "b-v1")
 
     def runOnce(): Unit = {
       val ckpt = Files.createTempDirectory("scd2r-ck").toString
-      val q = Apply.startScd2Materialize(spark,
-        FileChangeSource(inDir).changes(spark), "id", Seq("name"),
+      val q = Apply.startScd2Materialize(spark, walStream(walId), "id", Seq("name"),
         tableDir, ckpt, triggerMs = 50)
       try q.processAllAvailable() finally q.stop()
     }

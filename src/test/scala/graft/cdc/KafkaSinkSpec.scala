@@ -4,18 +4,15 @@ import graft.SparkTestSession
 import graft.replicate.ReplicatorStats
 import graft.sources.{InMemoryWal, WalRecord}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.{StringType, BinaryType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-/** The Kafka egress shape, exercised without a broker (none offline):
-  * the producer tuning the reference configures
-  * (`internal/integrations/kafka/repository.go:49-60`) must land in the
-  * sink options, the frame must carry the key/value contract, and the
-  * delivery-report parity path (`:100-119`) must surface per-batch write
-  * failures.
+/** The delivery-report parity path of the Kafka egress
+  * (`internal/integrations/kafka/repository.go:100-119`): a failed
+  * micro-batch write surfaces through the per-batch hook, counts as a
+  * write error, and is redelivered after a restart (at-least-once).
   */
 class KafkaSinkSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -29,41 +26,6 @@ class KafkaSinkSpec extends AnyFunSuite {
       .option("wal.client", "graft.sources.InMemoryWalClient")
       .option("wal.id", walId)
       .load()
-  }
-
-  test("producer options carry the reference's tuned defaults") {
-    val opts = ReplicatePipeline.kafkaProducerOptions("broker:9092", "cdc.events")
-    assert(opts("kafka.bootstrap.servers") == "broker:9092")
-    assert(opts("topic") == "cdc.events")
-    // internal/integrations/kafka/repository.go:49-60
-    assert(opts("kafka.acks") == "1")
-    assert(opts("kafka.retries") == "3")
-    assert(opts("kafka.batch.size") == "16384")
-    assert(opts("kafka.linger.ms") == "5")
-    assert(opts("kafka.compression.type") == "snappy")
-    assert(opts("kafka.max.in.flight.requests.per.connection") == "5")
-    assert(opts("kafka.request.timeout.ms") == "5000")
-    assert(opts("kafka.delivery.timeout.ms") == "10000")
-  }
-
-  test("URL-param-style overrides win over defaults (repository.go:62-81)") {
-    val opts = ReplicatePipeline.kafkaProducerOptions("b:9092", "t",
-      overrides = Map("acks" -> "all", "kafka.linger.ms" -> "50"))
-    assert(opts("kafka.acks") == "all")
-    assert(opts("kafka.linger.ms") == "50")
-    assert(opts("kafka.batch.size") == "16384") // untouched default
-  }
-
-  test("kafka writer builds on the envelope frame with the key/value contract") {
-    val frame = Envelope.toKafkaFrame(walFrame("kafka-shape"), "postgres", "r1")
-    // the Kafka sink contract: exactly (key, value), both string/binary
-    assert(frame.schema.fieldNames.toSeq == Seq("key", "value"))
-    assert(frame.schema.fields.forall(f =>
-      f.dataType == StringType || f.dataType == BinaryType))
-    // writer construction applies the tuned options without needing a broker
-    val ckpt = Files.createTempDirectory("kafka-ckpt").toString
-    val w = ReplicatePipeline.kafkaWriter(frame, "broker:9092", "cdc.events", ckpt)
-    assert(w != null) // options validated via kafkaProducerOptions above
   }
 
   test("delivery-report hook fires per failed batch, counts write errors, keeps at-least-once") {

@@ -1,6 +1,7 @@
 package graft.cdc
 
 import graft.cdc.KafkaWire._
+import graft.sources.{InMemoryWal, WalRecord}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
@@ -463,15 +464,18 @@ class KafkaWireSpec extends AnyFunSuite {
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
     val broker = new ScriptedKafkaBroker("changes", numPartitions = 3)
-    val inDir = java.nio.file.Files.createTempDirectory("kwire-in").toString
     val ckpt = java.nio.file.Files.createTempDirectory("kwire-ckpt").toString
+    val walId = "kwire-envelope"
+    InMemoryWal.clear(walId)
     try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(inDir, "b0.json"),
-        """{"db":"appdb","schema":"public","table":"users","op":"c","ts_ms":1700000000000,"before":null,"after":{"id":"7","name":"ada"},"lsn":8448,"txId":9}""" + "\n" +
-          """{"db":"appdb","schema":"public","table":"orders","op":"d","ts_ms":1700000000001,"before":{"id":"3"},"after":null,"lsn":8449,"txId":9}""")
-      val frame = ReplicatePipeline.envelopeFrame(
-        FileChangeSource(inDir), spark, "postgresql", "graft")
+      InMemoryWal.append(walId, WalRecord(8448L, "appdb", "public", "users", "c",
+        1700000000000L, null, Map("id" -> "7", "name" -> "ada"), 9L))
+      InMemoryWal.append(walId, WalRecord(8449L, "appdb", "public", "orders", "d",
+        1700000000001L, Map("id" -> "3"), null, 9L))
+      val frame = Envelope.toKafkaFrame(spark.readStream
+        .format("graft.sources.CdcSourceProvider")
+        .option("wal.client", "graft.sources.InMemoryWalClient")
+        .option("wal.id", walId).load(), "postgresql", "graft")
       val q = ReplicatePipeline.startToKafkaWire(frame, "127.0.0.1",
         broker.port, "changes", ckpt)
       try q.processAllAvailable()

@@ -1,76 +1,94 @@
 package graft.replicate
 
 import graft.SparkTestSession
-import graft.cdc.{FileChangeSource, ReplicatePipeline}
+import graft.cdc.KafkaWire.decodeRecordBatch
+import graft.cdc.{Envelope, ReplicatePipeline, ScriptedKafkaBroker}
 import graft.control.StatsServer
+import graft.sources.{InMemoryWal, WalRecord}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.{Files, Path}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
 
 class ReplicatorSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def writeChangeFile(dir: Path, name: String, rows: Seq[String]): Unit =
-    Files.writeString(dir.resolve(name), rows.mkString("\n"))
+  private def change(walId: String, op: String, id: Int, lsn: Long): Unit =
+    InMemoryWal.append(walId, WalRecord(lsn, "appdb", "public", "users", op,
+      1000L + lsn, null, Map("id" -> id.toString), 1L))
 
-  private def changeLine(op: String, id: Int, ts: Long, lsn: Long): String =
-    s"""{"db":"appdb","schema":"public","table":"users","op":"$op","ts_ms":$ts,
-       |"after":{"id":"$id"},"lsn":$lsn,"txId":1}""".stripMargin.replace("\n", "")
+  /** The measured replicate path: DSv2 CDC source -> envelope -> wire
+    * Kafka, resuming from `ckpt`. */
+  private def pipeline(walId: String, name: String, broker: ScriptedKafkaBroker,
+      ckpt: String): SparkSession => StreamingQuery = s =>
+    ReplicatePipeline.startToKafkaWire(
+      Envelope.toKafkaFrame(s.readStream.format("graft.sources.CdcSourceProvider")
+        .option("wal.client", "graft.sources.InMemoryWalClient")
+        .option("wal.id", walId).load(), "postgresql", name),
+      "127.0.0.1", broker.port, "changes", ckpt)
 
-  test("replicate pipeline: file change source -> envelope -> sink, with pause/resume") {
-    val in = Files.createTempDirectory("graft-cdc-in")
-    val out = Files.createTempDirectory("graft-cdc-out").toString
+  private def values(broker: ScriptedKafkaBroker): Seq[String] =
+    broker.produced.toArray(Array.empty[broker.Captured]).toSeq.flatMap(c =>
+      decodeRecordBatch(c.recordSet).map(r => new String(r.value, UTF_8)))
+
+  test("replicate pipeline: CDC source -> wire Kafka, with pause/resume") {
+    val walId = "replicator-r1"
+    InMemoryWal.clear(walId)
+    val broker = new ScriptedKafkaBroker("changes", numPartitions = 3)
     val ckpt = Files.createTempDirectory("graft-cdc-ckpt").toString
+    (1 to 5).foreach(i => change(walId, "c", i, i))
 
-    writeChangeFile(in, "batch1.json", (1 to 5).map(i => changeLine("c", i, 1000L + i, i)))
-
-    val repl = new Replicator("r1", spark, s =>
-      ReplicatePipeline.startToParquet(
-        FileChangeSource(in.toString), s, "postgres", "r1", out, ckpt))
+    val repl = new Replicator("r1", spark, pipeline(walId, "r1", broker, ckpt))
     ReplicatorRegistry.register(repl)
+    try {
+      repl.start()
+      assert(repl.fsm.state == FsmState.Streaming)
+      repl.processAllAvailable()
+      assert(values(broker).size == 5)
 
-    repl.start()
-    assert(repl.fsm.state == FsmState.Streaming)
-    repl.processAllAvailable()
-    val firstCount = spark.read.parquet(out).count()
-    assert(firstCount == 5)
+      // pause = graceful stop; state visible; no query running
+      repl.pause()
+      assert(repl.fsm.state == FsmState.Paused)
+      assert(repl.activeQuery.isEmpty)
 
-    // pause = graceful stop; state visible; no query running
-    repl.pause()
-    assert(repl.fsm.state == FsmState.Paused)
-    assert(repl.activeQuery.isEmpty)
+      // new changes land while paused
+      (6 to 8).foreach(i => change(walId, "u", i, 100 + i))
 
-    // new data lands while paused
-    writeChangeFile(in, "batch2.json", (6 to 8).map(i => changeLine("u", i, 2000L + i, 100 + i)))
+      // resume restarts from the checkpoint: only the new changes are
+      // produced, no replay
+      repl.resume()
+      assert(repl.fsm.state == FsmState.Streaming)
+      repl.processAllAvailable()
+      val all = values(broker)
+      assert(all.size == 8, s"expected 8 (no duplicates after resume), got ${all.size}")
+      assert(all.distinct.size == 8, "every change produced exactly once")
 
-    // resume restarts from checkpoint: only the new file is processed, no replay
-    repl.resume()
-    assert(repl.fsm.state == FsmState.Streaming)
-    repl.processAllAvailable()
-    val total = spark.read.parquet(out).count()
-    assert(total == 8, s"expected 8 (no duplicates after resume), got $total")
+      // envelope content survived the full pipeline
+      assert(all.forall(_.contains(""""connector":"postgresql"""")))
+      assert(all.count(_.contains(""""op":"u"""")) == 3)
+      assert(broker.failure == null, s"broker failure: ${broker.failure}")
 
-    // envelope content survived the full pipeline
-    val values = spark.read.parquet(out).selectExpr("value").collect().map(_.getString(0))
-    assert(values.forall(_.contains(""""connector":"postgres"""")))
-    assert(values.count(_.contains(""""op":"u"""")) == 3)
-
-    repl.stop()
-    assert(repl.fsm.state == FsmState.Stopped)
-    assert(repl.stats.totalEvents.get == 8)
+      repl.stop()
+      assert(repl.fsm.state == FsmState.Stopped)
+      assert(repl.stats.totalEvents.get == 8)
+    } finally {
+      if (repl.fsm.state != FsmState.Stopped) repl.stop()
+      broker.stop()
+    }
   }
 
   test("stats server exposes state and drives signals (server.go:64-77)") {
-    val in = Files.createTempDirectory("graft-http-in")
-    val out = Files.createTempDirectory("graft-http-out").toString
+    val walId = "replicator-web1"
+    InMemoryWal.clear(walId)
+    val broker = new ScriptedKafkaBroker("changes", numPartitions = 3)
     val ckpt = Files.createTempDirectory("graft-http-ckpt").toString
-    writeChangeFile(in, "b1.json", Seq(changeLine("c", 1, 1L, 1L)))
+    change(walId, "c", 1, 1L)
 
-    val repl = new Replicator("web1", spark, s =>
-      ReplicatePipeline.startToParquet(
-        FileChangeSource(in.toString), s, "postgres", "web1", out, ckpt))
+    val repl = new Replicator("web1", spark, pipeline(walId, "web1", broker, ckpt))
     ReplicatorRegistry.register(repl)
     repl.start()
     repl.processAllAvailable()
@@ -129,6 +147,7 @@ class ReplicatorSpec extends AnyFunSuite {
     } finally {
       server.stop()
       if (repl.fsm.state != FsmState.Stopped) repl.stop()
+      broker.stop()
     }
   }
 }

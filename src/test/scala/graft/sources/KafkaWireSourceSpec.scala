@@ -138,24 +138,27 @@ class KafkaWireSourceSpec extends AnyFunSuite {
   }
 
   test("CDC changes survive the full produce/fetch loop and apply cleanly") {
-    // file change-source -> Debezium envelope -> wire produce -> wire
+    // DSv2 CDC source -> Debezium envelope -> wire produce -> wire
     // batch read -> envelope decode -> applyChanges: the whole replicate
     // pipeline round-trips through a broker with no client jar anywhere
     val spark = graft.SparkTestSession.spark
     val broker = new ScriptedKafkaBroker("cdc", numPartitions = 3)
-    val inDir = java.nio.file.Files.createTempDirectory("kwcdc-in").toString
     val ckpt = java.nio.file.Files.createTempDirectory("kwcdc-ckpt").toString
+    val walId = "kwcdc-wal"
+    InMemoryWal.clear(walId)
     try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(inDir, "b0.json"),
-        Seq(
-          """{"db":"appdb","schema":"public","table":"users","op":"c","ts_ms":1,"before":null,"after":{"id":"1","name":"ada"},"lsn":10,"txId":1}""",
-          """{"db":"appdb","schema":"public","table":"users","op":"c","ts_ms":2,"before":null,"after":{"id":"2","name":"bob"},"lsn":11,"txId":2}""",
-          """{"db":"appdb","schema":"public","table":"users","op":"u","ts_ms":3,"before":{"id":"1","name":"ada"},"after":{"id":"1","name":"ada2"},"lsn":12,"txId":3}""",
-          """{"db":"appdb","schema":"public","table":"users","op":"d","ts_ms":4,"before":{"id":"2","name":"bob"},"after":null,"lsn":13,"txId":4}"""
-        ).mkString("\n"))
-      val frame = graft.cdc.ReplicatePipeline.envelopeFrame(
-        graft.cdc.FileChangeSource(inDir), spark, "postgresql", "graft")
+      def change(lsn: Long, op: String, before: Map[String, String],
+          after: Map[String, String]): Unit =
+        InMemoryWal.append(walId, WalRecord(lsn, "appdb", "public", "users",
+          op, lsn - 9, before, after, lsn - 9))
+      change(10, "c", null, Map("id" -> "1", "name" -> "ada"))
+      change(11, "c", null, Map("id" -> "2", "name" -> "bob"))
+      change(12, "u", Map("id" -> "1", "name" -> "ada"), Map("id" -> "1", "name" -> "ada2"))
+      change(13, "d", Map("id" -> "2", "name" -> "bob"), null)
+      val frame = graft.cdc.Envelope.toKafkaFrame(spark.readStream
+        .format("graft.sources.CdcSourceProvider")
+        .option("wal.client", "graft.sources.InMemoryWalClient")
+        .option("wal.id", walId).load(), "postgresql", "graft")
       val q = graft.cdc.ReplicatePipeline.startToKafkaWire(
         frame, "127.0.0.1", broker.port, "cdc", ckpt)
       try q.processAllAvailable() finally q.stop()

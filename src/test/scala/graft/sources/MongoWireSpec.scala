@@ -112,13 +112,25 @@ class ScramSpec extends AnyFunSuite {
   * exchange with fixed salt/nonce so the client's proof is checked against
   * the published vector, not against our own crypto.
   */
-class ScriptedMongod(batches: Seq[Seq[BDoc]], requireAuth: Boolean = false) {
+class ScriptedMongod(batches: Seq[Seq[BDoc]], requireAuth: Boolean = false,
+    tailable: Boolean = false) {
   private val server = new ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
   val port: Int = server.getLocalPort
   val commands = new ConcurrentLinkedQueue[BDoc]()
   @volatile var failure: Throwable = _
   @volatile var sawKillCursors = false
   private var remaining = batches
+
+  /** Queue one more batch: events arriving while the cursor is open (a
+    * `tailable` server keeps the cursor open on empty batches). */
+  def push(batch: Seq[BDoc]): Unit = synchronized { remaining = remaining :+ batch }
+
+  /** The next batch and the cursor id to reply with (0 = exhausted). */
+  private def nextBatch(): (Seq[BDoc], Long) = synchronized {
+    val batch = remaining.headOption.getOrElse(Seq.empty)
+    remaining = remaining.drop(1)
+    (batch, if (remaining.nonEmpty || tailable) 9001L else 0L)
+  }
 
   private val thread = new Thread(() => {
     try serve()
@@ -173,17 +185,15 @@ class ScriptedMongod(batches: Seq[Seq[BDoc]], requireAuth: Boolean = false) {
               "code" -> 13))
             else reply(BDoc("ok" -> 1.0))
           case "aggregate" =>
-            val batch = remaining.headOption.getOrElse(Seq.empty)
-            remaining = remaining.drop(1)
+            val (batch, cursorId) = nextBatch()
             reply(BDoc("ok" -> 1.0, "cursor" -> BDoc(
-              "id" -> (if (remaining.nonEmpty) 9001L else 0L),
+              "id" -> cursorId,
               "ns" -> s"${cmd.str("$db").getOrElse("?")}.${cmd.str("aggregate").getOrElse("?")}",
               "firstBatch" -> BArr(batch.toVector: _*))))
           case "getMore" =>
-            val batch = remaining.headOption.getOrElse(Seq.empty)
-            remaining = remaining.drop(1)
+            val (batch, cursorId) = nextBatch()
             reply(BDoc("ok" -> 1.0, "cursor" -> BDoc(
-              "id" -> (if (remaining.nonEmpty) 9001L else 0L),
+              "id" -> cursorId,
               "ns" -> "x.y",
               "nextBatch" -> BArr(batch.toVector: _*))))
           case "killCursors" =>
