@@ -64,7 +64,8 @@ object Cli {
     * `replicate.go:82-120`): the `--source` scheme picks the DSv2 source,
     * whose changes become Debezium envelopes named `--id` and go to
     * `--target` over [[ReplicatePipeline.startToKafkaWire]], resuming from
-    * `--checkpoint`. `--id` also keys the source's transport/cursor
+    * `--checkpoint` (each start hands the checkpointed offset to the
+    * source client). `--id` also keys the source's transport/cursor
     * registry. Flags are checked before any query starts; the running
     * replicator is registered with the control plane. */
   def startReplicator(spark: SparkSession, flags: Map[String, String]): Replicator = {
@@ -74,23 +75,38 @@ object Cli {
     val (provider, connector, options) = replicateSource(req("source"), id)
     val (host, port, topic) = kafkaTarget(req("target"))
     val checkpoint = req("checkpoint")
-    lazy val repl: Replicator = new Replicator(id, spark, s =>
+    lazy val repl: Replicator = new Replicator(id, spark, s => {
+      val resume = ReplicatePipeline.checkpointedOffset(s, checkpoint)
+        .flatMap(resumeOption(connector, _))
       ReplicatePipeline.startToKafkaWire(Envelope.toKafkaFrame(
-          s.readStream.format(provider).options(options).load(), connector, id),
+          s.readStream.format(provider).options(options ++ resume).load(), connector, id),
         host, port, topic, checkpoint,
-        onError = (b, e) => repl.stats.recordWriteError(b, e)))
+        onError = (b, e) => repl.stats.recordWriteError(b, e))
+    })
     ReplicatorRegistry.register(repl)
     repl.start()
     repl
   }
 
-  /** A `--source`/`--target` URL and its (percent-decoded) query; a
-    * query key outside `known` or a missing host is rejected. */
+  /** A checkpointed offset as the client's start option: an LSN, or a
+    * non-empty resume token. */
+  private def resumeOption(connector: String, offset: String): Option[(String, String)] =
+    if (connector == "postgresql") Some("pg.start.lsn" -> offset)
+    else Some("mongo.resume.after" -> offset).filter(_._2.nonEmpty)
+
+  /** Percent-decode one URL part; `+` stays a plus (not form encoding). */
+  private def urlDecode(s: String): String =
+    java.net.URLDecoder.decode(s.replace("+", "%2B"), java.nio.charset.StandardCharsets.UTF_8)
+
+  /** A `--source`/`--target` URL and its query, split on the raw `&`,
+    * `=` before each part is percent-decoded (so `%26`, `%3D` stay in a
+    * value); a query key outside `known` or a missing host is rejected. */
   private def replicateUrl(flag: String, url: String,
       known: Set[String]): (java.net.URI, Map[String, String]) = {
     val u = new java.net.URI(url)
-    val query = Option(u.getQuery).toSeq.flatMap(_.split("&")).filter(_.nonEmpty)
-      .map(_.split("=", 2)).map(kv => kv(0) -> kv.lift(1).getOrElse("")).toMap
+    val query = Option(u.getRawQuery).toSeq.flatMap(_.split("&")).filter(_.nonEmpty)
+      .map(_.split("=", 2).map(urlDecode))
+      .map(kv => kv(0) -> kv.lift(1).getOrElse("")).toMap
     query.keys.find(!known(_)).foreach(k => throw new IllegalArgumentException(
       s"replicate: unknown query key '$k' in --$flag $url"))
     require(u.getHost != null, s"replicate: --$flag $url names no host")
@@ -107,7 +123,8 @@ object Cli {
     def options(prefix: String, known: Set[String], defaultPort: Int,
         fixed: (String, String)*): Map[String, String] = {
       val (u, query) = replicateUrl("source", url, known)
-      val userInfo = Option(u.getUserInfo).toSeq.flatMap(_.split(":", 2))
+      // split the raw user info on its first ':', then decode each part
+      val userInfo = Option(u.getRawUserInfo).toSeq.flatMap(_.split(":", 2)).map(urlDecode)
       fixed.toMap ++ Map(s"$prefix.host" -> u.getHost, s"$prefix.port" ->
           (if (u.getPort >= 0) u.getPort else defaultPort).toString) ++
         Seq(s"$prefix.user", s"$prefix.password").zip(userInfo) ++

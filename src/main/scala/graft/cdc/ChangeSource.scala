@@ -1,7 +1,7 @@
 package graft.cdc
 
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The raw-change row contract every CDC source emits (the DSv2
@@ -37,6 +37,18 @@ object ChangeSource {
   * value = envelope JSON, acks=1.
   */
 object ReplicatePipeline {
+
+  /** The source offset JSON a query restarted on `checkpointDir` plans
+    * its first batch from (the last committed batch's end; None before
+    * the first commit). Live clients connect before the stream hands them
+    * a position, so a restart passes this as their start (`pg.start.lsn`,
+    * `mongo.resume.after`). Single-source queries only. */
+  def checkpointedOffset(spark: SparkSession, checkpointDir: String): Option[String] = {
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CommitLog, OffsetSeqLog}
+    new CommitLog(spark, s"$checkpointDir/commits").getLatestBatchId()
+      .flatMap(new OffsetSeqLog(spark, s"$checkpointDir/offsets").get(_))
+      .flatMap(_.offsets.headOption.flatten).map(_.json)
+  }
 
   /** Per-batch delivery-report seam. The reference surfaces async produce
     * failures through a delivery-report loop that logs and counts them

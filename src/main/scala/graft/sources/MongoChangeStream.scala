@@ -109,7 +109,8 @@ class ScriptedChangeStream(docs: Seq[String]) extends ChangeStreamCursor {
   * `latestToken()`/`readAfter(from, to]` contract works over the
   * forward-only stream. Registry-shared per `stream.cursor.id` (driver
   * drains; partition readers see the same buffer — the InMemoryWal
-  * pattern).
+  * pattern). A cursor opened after `mongo.resume.after` (a restart's
+  * checkpointed token) keeps that token as the empty buffer's head.
   */
 class ChangeStreamTokenClient extends TokenStreamClient {
   private var state: ChangeStreamRegistry.State = _
@@ -121,7 +122,8 @@ class ChangeStreamTokenClient extends TokenStreamClient {
     // nothing registered -> open the real wire-protocol cursor; tests
     // pre-register a ScriptedChangeStream under the same id instead
     if (options.contains("mongo.host"))
-      ChangeStreamRegistry.ensure(id)(MongoSocketCursor.fromOptions(options))
+      ChangeStreamRegistry.ensure(id, options.get("mongo.resume.after"))(
+        MongoSocketCursor.fromOptions(options))
     state = ChangeStreamRegistry.state(id)
   }
 
@@ -133,7 +135,7 @@ class ChangeStreamTokenClient extends TokenStreamClient {
         state.events += ev
       case None => more = false
     }
-    state.events.lastOption.map(_.resumeToken)
+    state.events.lastOption.map(_.resumeToken).orElse(state.resumedAfter)
   }
 
   override def readAfter(fromExclusive: Option[String],
@@ -146,7 +148,7 @@ class ChangeStreamTokenClient extends TokenStreamClient {
         val i = evs.indexWhere(_.resumeToken == t)
         // a token older than the trim head must fail fast — falling back
         // to the buffer start would silently duplicate/omit records
-        if (i < 0) throw new IllegalStateException(
+        if (i < 0 && !state.resumedAfter.contains(t)) throw new IllegalStateException(
           s"resume token $t not in the stream buffer (trimmed past it?)")
         i + 1
       }.getOrElse(0)
@@ -175,7 +177,9 @@ class ChangeStreamTokenClient extends TokenStreamClient {
 }
 
 object ChangeStreamRegistry {
-  final class State(val cursor: ChangeStreamCursor) {
+  /** `resumedAfter`: the token the cursor was opened after, if any. */
+  final class State(val cursor: ChangeStreamCursor,
+      val resumedAfter: Option[String] = None) {
     val events = mutable.Buffer.empty[ChangeStreamDecoder.StreamEvent]
   }
   private val reg = new java.util.concurrent.ConcurrentHashMap[String, State]()
@@ -184,8 +188,9 @@ object ChangeStreamRegistry {
   /** Register-if-absent (atomic): the live-socket wiring connects at most
     * once per id even under concurrent configure() calls.
     */
-  def ensure(id: String)(mk: => ChangeStreamCursor): State =
-    reg.computeIfAbsent(id, _ => new State(mk))
+  def ensure(id: String, resumedAfter: Option[String] = None)(
+      mk: => ChangeStreamCursor): State =
+    reg.computeIfAbsent(id, _ => new State(mk, resumedAfter))
   def state(id: String): State =
     Option(reg.get(id)).getOrElse(
       throw new IllegalArgumentException(s"no change-stream cursor registered: $id"))

@@ -61,18 +61,21 @@ case class PgChange(op: String, namespace: String, table: String,
   *   - Origin/Type/Truncate/unknown -> ignored (`:164-168`, `:216-220`)
   *
   * `clock` is injected so heartbeat cadence is unit-testable.
+  * `resumeLsn` (a restart's checkpointed LSN; 0 = fresh start) is the
+  * resume position until a newer commit arrives, and already durable.
   */
 class PgOutputSession(transport: ReplicationTransport,
     heartbeatMillis: Long = 30000L,
-    clock: () => Long = () => System.currentTimeMillis()) {
+    clock: () => Long = () => System.currentTimeMillis(),
+    resumeLsn: Long = 0L) {
 
   private val relations = mutable.Map.empty[Int, RelationMessage]
   private var txCommitLsn = 0L
   private var txXid = 0L
   private var txCommitTimeMillis = 0L
-  private var currentLsnVar = 0L
+  private var currentLsnVar = resumeLsn
   private var lastHeartbeatAt = clock()
-  @volatile private var durableLsnVar = 0L
+  @volatile private var durableLsnVar = resumeLsn
 
   /** The engine's durably-committed LSN (the micro-batch offset log).
     * Once set, standby status updates ack flush/apply no further than
@@ -190,7 +193,10 @@ class PgOutputWalClient extends WalClient {
     // re-configure a no-op either way.
     if (options.contains("pg.host"))
       PgTransports.ensure(id)(PgSocketTransport.fromOptions(options, db))
-    state = PgStreams.state(id)
+    // a restart reports its checkpointed LSN until newer commits arrive:
+    // no first batch runs the offset log backwards
+    state = PgStreams.state(id,
+      options.get("pg.start.lsn").map(PgSocketTransport.parseLsnOption).getOrElse(0L))
   }
 
   override def latest(): Long = state.synchronized {
@@ -247,7 +253,9 @@ object PgStreams {
     val buffer = new java.util.concurrent.ConcurrentSkipListMap[Long, List[PgChange]]()
   }
   private val reg = new java.util.concurrent.ConcurrentHashMap[String, State]()
-  def state(id: String): State =
-    reg.computeIfAbsent(id, _ => new State(new PgOutputSession(PgTransports.get(id))))
+  /** `resumeLsn` seeds a newly created session only. */
+  def state(id: String, resumeLsn: Long = 0L): State =
+    reg.computeIfAbsent(id, _ =>
+      new State(new PgOutputSession(PgTransports.get(id), resumeLsn = resumeLsn)))
   def clear(id: String): Unit = reg.remove(id)
 }

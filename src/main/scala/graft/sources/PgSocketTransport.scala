@@ -165,8 +165,11 @@ object PgSocketTransport {
       password = options.get("pg.password"),
       slotName = options.getOrElse("pg.slot", "graft_slot"),
       publication = options.getOrElse("pg.publication", "graft_pub"),
-      startLsn = options.get("pg.start.lsn").map(s =>
-        if (s.contains('/')) PgOutput.parseLsn(s) else java.lang.Long.parseLong(s)))
+      startLsn = options.get("pg.start.lsn").map(parseLsnOption))
+
+  /** `pg.start.lsn`: PG's X/X hex form or a decimal (an [[LsnOffset]]). */
+  def parseLsnOption(s: String): Long =
+    if (s.contains('/')) PgOutput.parseLsn(s) else java.lang.Long.parseLong(s)
 }
 
 class PgSocketTransport(host: String, port: Int, database: String,

@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.SparkTestSession
-import graft.sources.{InMemoryWal, WalRecord}
+import graft.sources.{InMemoryWal, InMemoryWalStream, WalRecord}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -53,13 +53,6 @@ class ApplySpec extends AnyFunSuite {
       ("B", "b-v1", 2L, -1L, true)), s"got $out")
   }
 
-  /** A streaming raw-change frame over the in-memory WAL `walId`. */
-  private def walStream(walId: String) = spark.readStream
-    .format("graft.sources.CdcSourceProvider")
-    .option("wal.client", "graft.sources.InMemoryWalClient")
-    .option("wal.id", walId)
-    .load()
-
   /** A users change at `lsn`; deletes carry only the before image (where
     * the key lives), like pgoutput. */
   private def walChange(walId: String, lsn: Long, op: String, id: String,
@@ -77,7 +70,7 @@ class ApplySpec extends AnyFunSuite {
     walChange(walId, 1, "c", "A", "a-v1")
     walChange(walId, 3, "u", "A", "a-v2")
     walChange(walId, 2, "c", "B", "b-v1")
-    val q = Apply.startScd2Materialize(spark, walStream(walId), "id", Seq("name"),
+    val q = Apply.startScd2Materialize(spark, InMemoryWalStream(spark, walId), "id", Seq("name"),
       tableDir, ckpt, triggerMs = 50)
     try {
       q.processAllAvailable()
@@ -111,7 +104,7 @@ class ApplySpec extends AnyFunSuite {
 
     def runOnce(): Unit = {
       val ckpt = Files.createTempDirectory("scd2r-ck").toString
-      val q = Apply.startScd2Materialize(spark, walStream(walId), "id", Seq("name"),
+      val q = Apply.startScd2Materialize(spark, InMemoryWalStream(spark, walId), "id", Seq("name"),
         tableDir, ckpt, triggerMs = 50)
       try q.processAllAvailable() finally q.stop()
     }
@@ -153,11 +146,7 @@ class ApplySpec extends AnyFunSuite {
 
     val table = Files.createTempDirectory("apply-table").toString + "/t"
     val ckpt = Files.createTempDirectory("apply-ckpt").toString
-    val changes = spark.readStream
-      .format("graft.sources.CdcSourceProvider")
-      .option("wal.client", "graft.sources.InMemoryWalClient")
-      .option("wal.id", walId)
-      .load()
+    val changes = InMemoryWalStream(spark, walId)
     val q = Apply.startMaterialize(spark, changes, "id", Seq("name"),
       table, ckpt, triggerMs = 50)
     try {

@@ -2,7 +2,7 @@ package graft.cdc
 
 import graft.SparkTestSession
 import graft.replicate.ReplicatorStats
-import graft.sources.{InMemoryWal, WalRecord}
+import graft.sources.{InMemoryWal, InMemoryWalStream, WalRecord}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,11 +21,7 @@ class KafkaSinkSpec extends AnyFunSuite {
     InMemoryWal.clear(walId)
     InMemoryWal.append(walId, WalRecord(1L, "appdb", "public", "users", "c",
       1000L, null, Map("id" -> "1"), 1L))
-    spark.readStream
-      .format("graft.sources.CdcSourceProvider")
-      .option("wal.client", "graft.sources.InMemoryWalClient")
-      .option("wal.id", walId)
-      .load()
+    InMemoryWalStream(spark, walId)
   }
 
   test("delivery-report hook fires per failed batch, counts write errors, keeps at-least-once") {

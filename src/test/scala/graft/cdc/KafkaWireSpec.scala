@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.cdc.KafkaWire._
-import graft.sources.{InMemoryWal, WalRecord}
+import graft.sources.{InMemoryWal, InMemoryWalStream, WalRecord}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
@@ -472,10 +472,7 @@ class KafkaWireSpec extends AnyFunSuite {
         1700000000000L, null, Map("id" -> "7", "name" -> "ada"), 9L))
       InMemoryWal.append(walId, WalRecord(8449L, "appdb", "public", "orders", "d",
         1700000000001L, Map("id" -> "3"), null, 9L))
-      val frame = Envelope.toKafkaFrame(spark.readStream
-        .format("graft.sources.CdcSourceProvider")
-        .option("wal.client", "graft.sources.InMemoryWalClient")
-        .option("wal.id", walId).load(), "postgresql", "graft")
+      val frame = Envelope.toKafkaFrame(InMemoryWalStream(spark, walId), "postgresql", "graft")
       val q = ReplicatePipeline.startToKafkaWire(frame, "127.0.0.1",
         broker.port, "changes", ckpt)
       try q.processAllAvailable()

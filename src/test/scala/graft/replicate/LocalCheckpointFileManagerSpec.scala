@@ -2,7 +2,7 @@ package graft.replicate
 
 import graft.SparkTestSession
 import graft.cdc.ReplicatePipeline
-import graft.sources.{InMemoryWal, WalRecord}
+import graft.sources.{InMemoryWal, InMemoryWalStream, WalRecord}
 import jdk.jfr.consumer.RecordingStream
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, Path, RawLocalFileSystem}
@@ -59,10 +59,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
 
     private def query(s: SparkSession): StreamingQuery =
       ReplicatePipeline.startWithDeliveryReports(
-        s.readStream.format("graft.sources.CdcSourceProvider")
-          .option("wal.client", "graft.sources.InMemoryWalClient")
-          .option("wal.id", walId)
-          .load(),
+        InMemoryWalStream(s, walId),
         writeBatch = (df, batchId) => {
           df.select("lsn").collect().foreach(r => lsns.add(r.getLong(0)))
           batches.add(batchId)

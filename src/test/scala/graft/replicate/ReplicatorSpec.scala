@@ -4,7 +4,7 @@ import graft.SparkTestSession
 import graft.cdc.KafkaWire.decodeRecordBatch
 import graft.cdc.{Envelope, ReplicatePipeline, ScriptedKafkaBroker}
 import graft.control.StatsServer
-import graft.sources.{InMemoryWal, WalRecord}
+import graft.sources.{InMemoryWal, InMemoryWalStream, WalRecord}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,9 +26,7 @@ class ReplicatorSpec extends AnyFunSuite {
   private def pipeline(walId: String, name: String, broker: ScriptedKafkaBroker,
       ckpt: String): SparkSession => StreamingQuery = s =>
     ReplicatePipeline.startToKafkaWire(
-      Envelope.toKafkaFrame(s.readStream.format("graft.sources.CdcSourceProvider")
-        .option("wal.client", "graft.sources.InMemoryWalClient")
-        .option("wal.id", walId).load(), "postgresql", name),
+      Envelope.toKafkaFrame(InMemoryWalStream(s, walId), "postgresql", name),
       "127.0.0.1", broker.port, "changes", ckpt)
 
   private def values(broker: ScriptedKafkaBroker): Seq[String] =

@@ -16,11 +16,7 @@ class CdcSourceSpec extends AnyFunSuite {
       txId = lsn / 10)
 
   private def startQuery(walId: String, out: String, ckpt: String) =
-    spark.readStream
-      .format("graft.sources.CdcSourceProvider")
-      .option("wal.client", "graft.sources.InMemoryWalClient")
-      .option("wal.id", walId)
-      .load()
+    InMemoryWalStream(spark, walId)
       .writeStream
       .format("parquet")
       .option("path", out)
@@ -82,11 +78,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
     val out = Files.createTempDirectory("cdc-out3").toString
     val ckpt = Files.createTempDirectory("cdc-ckpt3").toString
-    val changes = spark.readStream
-      .format("graft.sources.CdcSourceProvider")
-      .option("wal.client", "graft.sources.InMemoryWalClient")
-      .option("wal.id", walId)
-      .load()
+    val changes = InMemoryWalStream(spark, walId)
     val q = graft.cdc.Envelope.toKafkaFrame(changes, "postgres", "cdc-e2e")
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)

@@ -155,10 +155,8 @@ class KafkaWireSourceSpec extends AnyFunSuite {
       change(11, "c", null, Map("id" -> "2", "name" -> "bob"))
       change(12, "u", Map("id" -> "1", "name" -> "ada"), Map("id" -> "1", "name" -> "ada2"))
       change(13, "d", Map("id" -> "2", "name" -> "bob"), null)
-      val frame = graft.cdc.Envelope.toKafkaFrame(spark.readStream
-        .format("graft.sources.CdcSourceProvider")
-        .option("wal.client", "graft.sources.InMemoryWalClient")
-        .option("wal.id", walId).load(), "postgresql", "graft")
+      val frame = graft.cdc.Envelope.toKafkaFrame(
+        InMemoryWalStream(spark, walId), "postgresql", "graft")
       val q = graft.cdc.ReplicatePipeline.startToKafkaWire(
         frame, "127.0.0.1", broker.port, "cdc", ckpt)
       try q.processAllAvailable() finally q.stop()

@@ -111,9 +111,14 @@ class ScramSpec extends AnyFunSuite {
   * command, and (optionally) runs the server side of the RFC 7677 SCRAM
   * exchange with fixed salt/nonce so the client's proof is checked against
   * the published vector, not against our own crypto.
+  *
+  * `batches` arrive while the cursor is open; `history` is what the oplog
+  * already holds when it opens. A change stream opens at "now", so only a
+  * cursor opened with `resumeAfter` sees history: the events after its
+  * token, ahead of the first batch.
   */
 class ScriptedMongod(batches: Seq[Seq[BDoc]], requireAuth: Boolean = false,
-    tailable: Boolean = false) {
+    tailable: Boolean = false, history: Seq[BDoc] = Seq.empty) {
   private val server = new ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
   val port: Int = server.getLocalPort
   val commands = new ConcurrentLinkedQueue[BDoc]()
@@ -185,11 +190,17 @@ class ScriptedMongod(batches: Seq[Seq[BDoc]], requireAuth: Boolean = false,
               "code" -> 13))
             else reply(BDoc("ok" -> 1.0))
           case "aggregate" =>
+            def token(d: BDoc) = d.doc("_id").flatMap(_.str("_data"))
+            val resumeAfter = cmd.arr("pipeline").toSeq.flatten
+              .collect { case d: BDoc => d }.flatMap(_.doc("$changeStream"))
+              .flatMap(_.doc("resumeAfter")).flatMap(_.str("_data")).headOption
+            val replay = resumeAfter.toSeq.flatMap(t =>
+              history.dropWhile(!token(_).contains(t)).drop(1))
             val (batch, cursorId) = nextBatch()
             reply(BDoc("ok" -> 1.0, "cursor" -> BDoc(
               "id" -> cursorId,
               "ns" -> s"${cmd.str("$db").getOrElse("?")}.${cmd.str("aggregate").getOrElse("?")}",
-              "firstBatch" -> BArr(batch.toVector: _*))))
+              "firstBatch" -> BArr((replay ++ batch).toVector: _*))))
           case "getMore" =>
             val (batch, cursorId) = nextBatch()
             reply(BDoc("ok" -> 1.0, "cursor" -> BDoc(

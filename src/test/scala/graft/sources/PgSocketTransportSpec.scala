@@ -11,7 +11,8 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 /** Scripted PostgreSQL backend speaking canned v3-protocol bytes on a real
   * localhost socket: MD5 auth handshake, simple-query responses keyed on
-  * the received SQL, CopyBothResponse + replication frames, and capture of
+  * the received SQL, CopyBothResponse + the replication frames at or past
+  * the LSN that START_REPLICATION asks for, and capture of
   * client standby status updates — the offline test bed for the socket
   * transport (the live half of S1 the other specs stub out).
   */
@@ -120,7 +121,12 @@ class ScriptedPgServer(salt: Array[Byte],
               out.write(readyForQuery)
             case StartCopy =>
               out.write(typedMessage('W', Array[Byte](0, 0, 0)))
-              copyFrames.foreach(f => out.write(typedMessage('d', f)))
+              // stream from the requested LSN: WAL data that starts below
+              // it is not sent (keepalives always are)
+              val from = "LOGICAL (\\S+)".r.findFirstMatchIn(sql)
+                .map(m => PgOutput.parseLsn(m.group(1))).getOrElse(0L)
+              copyFrames.filter(f => f(0) != 'w' || ByteBuffer.wrap(f, 1, 8).getLong >= from)
+                .foreach(f => out.write(typedMessage('d', f)))
               copyMode = true
           }
           out.flush()
