@@ -1,8 +1,8 @@
 package graft.cdc
 
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 /** The raw-change row contract every CDC source emits (the DSv2
   * [[graft.sources.CdcSourceProvider]] and
@@ -50,16 +50,35 @@ object ReplicatePipeline {
       .flatMap(_.offsets.headOption.flatten).map(_.json)
   }
 
-  /** Per-batch delivery-report seam. The reference surfaces async produce
-    * failures through a delivery-report loop that logs and counts them
-    * ("Add your retry logic, DLQ, or alerting here",
-    * `internal/integrations/kafka/repository.go:100-119`); Spark's sink
-    * fails the micro-batch instead, so the parity hook is per-batch:
-    * `onError` fires with (batchId, error) before the failure propagates,
-    * and the batch retries under the stream's at-least-once contract.
+  /** The batch a query on `checkpointDir` planned and did not commit:
+    * its offset-log entry is written before the batch runs, its
+    * commit-log entry only after every task succeeded. */
+  private def uncommittedBatch(spark: SparkSession, checkpointDir: String): Option[Long] = {
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CommitLog, OffsetSeqLog}
+    val committed = new CommitLog(spark, s"$checkpointDir/commits").getLatestBatchId()
+    new OffsetSeqLog(spark, s"$checkpointDir/offsets").getLatestBatchId()
+      .filter(b => !committed.exists(_ >= b))
+  }
+
+  /** Kafka sink over the library's own wire client: the frame's key and
+    * value, as strings, go to [[KafkaWireSinkProvider]], whose writer runs
+    * inside each micro-batch's own job (one [[KafkaWireCluster]] per task,
+    * murmur2 key partitioning, chunks bounded by the record-batch cap).
+    * Micro-batches run back to back: the next one starts as soon as the
+    * last one commits (Spark's default trigger), and a batch commits only
+    * after every record is acked (at-least-once).
+    *
+    * Delivery reports (the reference's delivery-report loop, "Add your
+    * retry logic, DLQ, or alerting here",
+    * `internal/integrations/kafka/repository.go:100-119`): when a batch
+    * fails, the query stops with the broker error, and `onError` fires
+    * once, on the driver, with that batch's id and the error's root cause.
+    * A restart on the same checkpoint replays the batch. The hook comes
+    * from a listener registered for this query alone and removed when it
+    * terminates, so `onError` is never serialized into a task.
     *
     * Commit path: before each batch the stream writes its offset-log entry
-    * (`walCommit`), and after `writeBatch` returns its commit-log entry
+    * (`walCommit`), and after the write its commit-log entry
     * (`commitOffsets`); both sit on the commit-to-ack critical path and go
     * through the session's checkpoint file manager. Under
     * [[graft.GraftSession.create]] that is
@@ -67,67 +86,52 @@ object ReplicatePipeline {
     * `checkpointDir` without starting a process; other schemes keep
     * Spark's default manager.
     */
-  def startWithDeliveryReports(frame: DataFrame,
-      writeBatch: (DataFrame, Long) => Unit,
-      onError: (Long, Throwable) => Unit,
-      checkpointDir: String,
-      triggerMs: Long = 100L): StreamingQuery =
-    frame.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        try writeBatch(df, batchId)
-        catch {
-          case e: Throwable =>
-            onError(batchId, e)
-            throw e // keep at-least-once: the batch must not be committed
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .start()
-
-  /** Kafka sink over the library's own wire client ([[KafkaWireCluster]]
-    * — no client jar): each micro-batch partition opens its own
-    * leader-routed connections and produces its rows with murmur2 key
-    * partitioning, so the work stays on the executors (no driver
-    * collect) and record batches stay under the broker's
-    * `message.max.bytes` via size-bounded chunking. Failures raise
-    * through `onError` and fail the batch — at-least-once, identical to
-    * [[startWithDeliveryReports]]. Connections are per-task by design
-    * (simple, correct under retries); a long-lived deployment would pool
-    * them per executor.
-    */
   def startToKafkaWire(frame: DataFrame, host: String, port: Int,
       topic: String, checkpointDir: String,
-      onError: (Long, Throwable) => Unit = (_, _) => (),
-      triggerMs: Long = 100L): StreamingQuery =
-    startWithDeliveryReports(frame,
-      writeBatch = (df, _) => {
-        import org.apache.spark.sql.functions.col
-        df.select(col("key").cast("string"), col("value").cast("string"))
-          .foreachPartition { (rows: Iterator[Row]) =>
-            if (rows.hasNext) {
-              val cluster = new KafkaWireCluster(host, port)
-              try {
-                val now = System.currentTimeMillis()
-                val records = rows.map { r =>
-                  // A null key/value means the frame wasn't built by
-                  // Envelope.toKafkaFrame — fail with context instead of
-                  // an anonymous executor NPE.
-                  require(!r.isNullAt(0) && !r.isNullAt(1),
-                    s"null key or value in Kafka frame for topic '$topic'; " +
-                      "frames must carry non-null key and value columns " +
-                      "(see Envelope.toKafkaFrame)")
-                  (r.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                    r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                    now)
-                }.toSeq
-                cluster.send(topic, records)
-                ()
-              } finally cluster.close()
-            }
-          }
-      },
-      onError = onError,
-      checkpointDir = checkpointDir,
-      triggerMs = triggerMs)
+      onError: (Long, Throwable) => Unit = (_, _) => ()): StreamingQuery = {
+    import org.apache.spark.sql.functions.col
+    val spark = frame.sparkSession
+    val reports = new DeliveryReports(spark, checkpointDir, onError)
+    spark.streams.addListener(reports)
+    var query: StreamingQuery = null
+    try {
+      query = frame.select(col("key").cast("string"), col("value").cast("string"))
+        .writeStream.format(classOf[KafkaWireSinkProvider].getName)
+        .option("host", host).option("port", port.toString).option("topic", topic)
+        .option("checkpointLocation", checkpointDir)
+        .start()
+      query
+    } finally {
+      if (query == null) spark.streams.removeListener(reports)
+      reports.watch(query)
+    }
+  }
+
+  /** The driver-side `onError` of one [[startToKafkaWire]] query. A query
+    * can terminate before `start()` returns its handle, so termination
+    * events wait for [[watch]]. */
+  private final class DeliveryReports(spark: SparkSession, checkpointDir: String,
+      onError: (Long, Throwable) => Unit) extends StreamingQueryListener {
+    private val started = new java.util.concurrent.CountDownLatch(1)
+    @volatile private var query: StreamingQuery = _
+
+    def watch(q: StreamingQuery): Unit = { query = q; started.countDown() }
+
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+      started.await()
+      val q = query
+      if (q != null && e.runId == q.runId) {
+        spark.streams.removeListener(this)
+        for {
+          failure <- q.exception
+          batch <- uncommittedBatch(spark, checkpointDir)
+        } onError(batch, rootCause(failure))
+      }
+    }
+
+    private def rootCause(t: Throwable): Throwable =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq.last
+  }
 }

@@ -26,6 +26,16 @@ object KafkaWire {
   val ApiMetadata: Short = 3
   val ApiVersions: Short = 18
 
+  /** Cap on one produce request's record batch, under the broker's
+    * default `message.max.bytes` (1 MB). Chunks are cut by
+    * [[chunkBytes]], an estimate with slack for each record's framing.
+    */
+  val MaxBatchBytes: Int = 900000
+
+  /** One record's share of a chunk: key + value + framing slack. */
+  def chunkBytes(key: Array[Byte], value: Array[Byte]): Int =
+    (if (key == null) 0 else key.length) + value.length + 32
+
   // -------------------------------------------------------- primitives —
 
   def writeString(out: ByteArrayOutputStream, s: String): Unit = {
@@ -597,8 +607,8 @@ abstract class KafkaWireClient(host: String, port: Int, val clientId: String,
   * Produce v3 with acks=1 (the reference target's setting). Per-partition
   * broker errors surface through `onError` — the reference's
   * delivery-report loop (`repository.go:100-119`) — AND raise, so a
-  * streaming caller's batch retries (at-least-once, same contract as
-  * [[ReplicatePipeline.startWithDeliveryReports]]).
+  * streaming caller's batch fails and is replayed (at-least-once, the
+  * contract of [[ReplicatePipeline.startToKafkaWire]]).
   */
 class KafkaWireProducer(host: String, port: Int, clientId: String = "graft",
     connectTimeoutMillis: Int = 10000, requestTimeoutMillis: Int = 5000,
@@ -619,7 +629,7 @@ class KafkaWireProducer(host: String, port: Int, clientId: String = "graft",
     * decide (the cluster router retries NOT_LEADER, [[send]] throws).
     */
   def produce(topic: String, partition: Int, records: Seq[Record],
-      maxBatchBytes: Int = 900000): Seq[PartitionAck] = {
+      maxBatchBytes: Int = KafkaWire.MaxBatchBytes): Seq[PartitionAck] = {
     require(records.nonEmpty, "produce with no records")
     val acks = Seq.newBuilder[PartitionAck]
     var chunk = Vector.empty[Record]
@@ -633,7 +643,7 @@ class KafkaWireProducer(host: String, port: Int, clientId: String = "graft",
       bytes = 0
     }
     records.foreach { r =>
-      val size = r.key.map(_.length).getOrElse(0) + r.value.length + 32
+      val size = chunkBytes(r.key.orNull, r.value)
       if (chunk.nonEmpty && bytes + size > maxBatchBytes) flush()
       chunk :+= r
       bytes += size
@@ -649,7 +659,7 @@ class KafkaWireProducer(host: String, port: Int, clientId: String = "graft",
     */
   def send(topic: String, numPartitions: Int,
       records: Seq[(Array[Byte], Array[Byte], Long)],
-      maxBatchBytes: Int = 900000): Map[Int, Long] = {
+      maxBatchBytes: Int = KafkaWire.MaxBatchBytes): Map[Int, Long] = {
     val byPartition = records.groupBy { case (key, _, _) =>
       partitionFor(key, numPartitions)
     }
@@ -749,15 +759,16 @@ class KafkaWireConsumer(host: String, port: Int, clientId: String = "graft",
 }
 
 /** Leader-routing producer for multi-broker clusters: resolves the
-  * partition->leader map from bootstrap metadata, keeps one
-  * [[KafkaWireProducer]] connection per leader, routes each keyed record
-  * to its partition's leader, and refreshes metadata + retries ONCE on
-  * NOT_LEADER_OR_FOLLOWER (error 6 — leadership moved between metadata
-  * and produce). Everything else surfaces through `onError` and raises
-  * (the at-least-once batch retry owns further recovery).
+  * partition->leader map from bootstrap metadata once per topic and keeps
+  * it for the client's lifetime, keeps one [[KafkaWireProducer]]
+  * connection per leader, routes each keyed record to its partition's
+  * leader, and refreshes metadata + retries ONCE on NOT_LEADER_OR_FOLLOWER
+  * (error 6 — leadership moved between metadata and produce). Everything
+  * else surfaces through `onError` and raises (the at-least-once batch
+  * retry owns further recovery).
   */
 class KafkaWireCluster(bootstrapHost: String, bootstrapPort: Int,
-    clientId: String = "graft", maxBatchBytes: Int = 900000,
+    clientId: String = "graft", maxBatchBytes: Int = KafkaWire.MaxBatchBytes,
     onError: (Int, Short) => Unit = (_, _) => ()) {
 
   import KafkaWire._
@@ -769,6 +780,10 @@ class KafkaWireCluster(bootstrapHost: String, bootstrapPort: Int,
   private def producerAt(host: String, port: Int): KafkaWireProducer =
     producers.getOrElseUpdate((host, port),
       new KafkaWireProducer(host, port, clientId, onError = onError))
+
+  /** topic -> (partition count, partition -> leader), fetched at the
+    * topic's first send and kept until a NOT_LEADER answer. */
+  private val routeCache = scala.collection.mutable.Map.empty[String, (Int, Map[Int, (String, Int)])]
 
   private def routes(topic: String): (Int, Map[Int, (String, Int)]) = {
     val (cluster, t) = producerAt(bootstrapHost, bootstrapPort).topicMeta(topic)
@@ -784,7 +799,7 @@ class KafkaWireCluster(bootstrapHost: String, bootstrapPort: Int,
   /** Send keyed records, routing each partition to its leader. */
   def send(topic: String,
       records: Seq[(Array[Byte], Array[Byte], Long)]): Map[Int, Long] = {
-    var (numPartitions, leaderOf) = routes(topic)
+    val numPartitions = routeCache.getOrElseUpdate(topic, routes(topic))._1
     val byPartition = records
       .map { case (k, v, ts) => (partitionFor(k, numPartitions), Record(Some(k), v, ts)) }
       .groupBy(_._1)
@@ -792,13 +807,14 @@ class KafkaWireCluster(bootstrapHost: String, bootstrapPort: Int,
     byPartition.toSeq.sortBy(_._1).foreach { case (p, rs) =>
       val recs = rs.map(_._2)
       def attempt(): Seq[PartitionAck] = {
-        val (host, port) = leaderOf.getOrElse(p, throw new IllegalStateException(
-          s"no leader for partition $p"))
+        val (host, port) = routeCache(topic)._2.getOrElse(p,
+          throw new IllegalStateException(s"no leader for partition $p"))
         producerAt(host, port).produce(topic, p, recs, maxBatchBytes)
       }
       var acks = attempt()
       if (acks.exists(_.errorCode == NotLeader)) {
-        leaderOf = routes(topic)._2 // leadership moved: refresh, retry once
+        // leadership moved: refresh the leaders, retry once
+        routeCache(topic) = (numPartitions, routes(topic)._2)
         acks = attempt()
       }
       val failed = acks.filter(_.errorCode != 0)

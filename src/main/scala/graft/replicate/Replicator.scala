@@ -22,8 +22,8 @@ class ReplicatorStats {
   val lastEventAtMs = new AtomicLong(0)
   val lastError = new AtomicReference[String]("")
 
-  /** Target-side delivery-report hook (wire to
-    * [[graft.cdc.ReplicatePipeline.startWithDeliveryReports]]): counts
+  /** Target-side delivery-report hook (the `onError` of
+    * [[graft.cdc.ReplicatePipeline.startToKafkaWire]]): counts
     * write failures separately from query-level errors, like the
     * reference's WriteErrorCount vs EventErrorCount
     * (`pkg/replicator/stats.go`, fed at

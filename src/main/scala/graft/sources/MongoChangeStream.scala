@@ -96,6 +96,11 @@ trait ChangeStreamCursor {
     * window is empty (the reference's MaxAwaitTime expiry).
     */
   def next(): Option[String]
+  /** Next event document only if it has already arrived (a batch the
+    * server already sent): never waits. The default suits cursors whose
+    * [[next]] never waits.
+    */
+  def nextArrived(): Option[String] = next()
   def close(): Unit = ()
 }
 
@@ -127,13 +132,16 @@ class ChangeStreamTokenClient extends TokenStreamClient {
     state = ChangeStreamRegistry.state(id)
   }
 
+  /** The token of the last event that has arrived (decoded into the
+    * buffer first). Waits for the cursor's next batch (one await window)
+    * only when no event has arrived; never drains until the stream goes
+    * quiet, so a steady stream cannot hold the planner here.
+    */
   override def latestToken(): Option[String] = state.synchronized {
-    var more = true
-    while (more) state.cursor.next() match {
-      case Some(json) =>
-        val ev = ChangeStreamDecoder.decode(json)
-        state.events += ev
-      case None => more = false
+    var doc = state.cursor.nextArrived().orElse(state.cursor.next())
+    while (doc.isDefined) {
+      state.events += ChangeStreamDecoder.decode(doc.get)
+      doc = state.cursor.nextArrived()
     }
     state.events.lastOption.map(_.resumeToken).orElse(state.resumedAfter)
   }

@@ -229,11 +229,15 @@ class MongoSocketCursor(host: String, port: Int, db: String, coll: String,
         .collect { case d: BDoc => Bson.toJson(d) }
       if (cursorId == 0L && buffer.isEmpty) ended = true
     }
+    nextArrived()
+  }
+
+  /** The next event of the batch already received; never sends getMore. */
+  override def nextArrived(): Option[String] =
     buffer.headOption match {
       case some @ Some(_) => buffer = buffer.tail; some
       case None => None
     }
-  }
 
   override def close(): Unit = {
     try {

@@ -18,6 +18,10 @@ trait ReplicationTransport {
     * ErrNoEventsFound, `pkg/postgres/source.go:110-117`).
     */
   def receive(): Option[Array[Byte]]
+  /** Next CopyData payload only if it has already arrived: never waits.
+    * The default suits transports whose [[receive]] never waits.
+    */
+  def receiveArrived(): Option[Array[Byte]] = receive()
   /** Send one client frame (standby status updates). */
   def send(frame: Array[Byte]): Unit
   def close(): Unit = ()
@@ -102,21 +106,37 @@ class PgOutputSession(transport: ReplicationTransport,
       transport.receive() match {
         case None => return None
         case Some(payload) =>
-          decodeFrame(payload) match {
-            case PrimaryKeepalive(serverWalEnd, _, replyRequested) =>
-              // reply-on-request at the server's WAL end, exactly as the
-              // reference (`pkg/postgres/source.go:140-152`)
-              if (replyRequested)
-                transport.send(encodeStandbyStatusUpdate(
-                  ackPosition(serverWalEnd), epochMillisToPgMicros(clock())))
-            case XLogData(_, _, _, data) =>
-              val change = dispatch(decodeLogical(data))
-              if (change.isDefined) return change
-          }
+          val change = handle(payload)
+          if (change.isDefined) return change
       }
     }
     None // unreachable
   }
+
+  /** Decode every frame that has already arrived, handing each change to
+    * `onChange` in stream order. Waits (one transport poll window) only
+    * when no frame has arrived at all; never waits for the stream to go
+    * quiet, so a steady stream cannot hold a caller here.
+    */
+  def drainArrived(onChange: PgChange => Unit): Unit = {
+    var frame = transport.receiveArrived().orElse(transport.receive())
+    while (frame.isDefined) {
+      handle(frame.get).foreach(onChange)
+      frame = transport.receiveArrived()
+    }
+  }
+
+  private def handle(payload: Array[Byte]): Option[PgChange] =
+    decodeFrame(payload) match {
+      case PrimaryKeepalive(serverWalEnd, _, replyRequested) =>
+        // reply-on-request at the server's WAL end, exactly as the
+        // reference (`pkg/postgres/source.go:140-152`)
+        if (replyRequested)
+          transport.send(encodeStandbyStatusUpdate(
+            ackPosition(serverWalEnd), epochMillisToPgMicros(clock())))
+        None
+      case XLogData(_, _, _, data) => dispatch(decodeLogical(data))
+    }
 
   private def dispatch(msg: LogicalMessage): Option[PgChange] = msg match {
     case rel: RelationMessage =>
@@ -199,13 +219,11 @@ class PgOutputWalClient extends WalClient {
       options.get("pg.start.lsn").map(PgSocketTransport.parseLsnOption).getOrElse(0L))
   }
 
+  /** The last commit among the frames that have arrived (decoded into
+    * the buffer first); waits one poll window only when none has. */
   override def latest(): Long = state.synchronized {
-    var more = true
-    while (more) state.session.poll() match {
-      case Some(ch) =>
-        state.buffer.merge(ch.commitLsn, List(ch), (a, b) => a ::: b)
-      case None => more = false
-    }
+    state.session.drainArrived(ch =>
+      state.buffer.merge(ch.commitLsn, List(ch), (a, b) => a ::: b))
     state.session.currentLsn
   }
 

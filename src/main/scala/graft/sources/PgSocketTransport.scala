@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
+import java.io.{BufferedInputStream, DataInputStream, DataOutputStream, EOFException}
 import java.net.{InetSocketAddress, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets
 
@@ -195,7 +195,8 @@ class PgSocketTransport(host: String, port: Int, database: String,
   private val socket = new Socket()
   socket.connect(new InetSocketAddress(host, port), connectTimeoutMillis)
   socket.setTcpNoDelay(true)
-  private val in = new DataInputStream(socket.getInputStream)
+  // buffered, so available() also counts bytes already read off the socket
+  private val in = new DataInputStream(new BufferedInputStream(socket.getInputStream))
   private val out = new DataOutputStream(socket.getOutputStream)
   @volatile private var streamEnded = false
 
@@ -355,10 +356,17 @@ class PgSocketTransport(host: String, port: Int, database: String,
     * while waiting for a message's FIRST byte; once a header starts, the
     * rest is read blocking — a timeout can't split a message.
     */
-  override def receive(): Option[Array[Byte]] = {
+  override def receive(): Option[Array[Byte]] = next(waitFirst = true)
+
+  /** [[receive]] without the wait: None unless a message's first byte has
+    * already arrived. */
+  override def receiveArrived(): Option[Array[Byte]] = next(waitFirst = false)
+
+  private def next(waitFirst: Boolean): Option[Array[Byte]] = {
     if (streamEnded) return None
-    socket.setSoTimeout(pollMillis)
     while (true) {
+      if (!waitFirst && in.available() == 0) return None
+      socket.setSoTimeout(pollMillis)
       val first =
         try in.readByte()
         catch {
@@ -376,7 +384,6 @@ class PgSocketTransport(host: String, port: Int, database: String,
         case other => throw new IllegalStateException(
           s"unexpected message '$other' in CopyBoth stream")
       }
-      socket.setSoTimeout(pollMillis)
     }
     None // unreachable
   }

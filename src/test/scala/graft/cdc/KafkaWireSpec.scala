@@ -33,7 +33,7 @@ class ScriptedKafkaBroker(topic: String, numPartitions: Int,
     // partition_max_bytes, which consumers must drop and re-fetch
     fetchTruncatesTail: Boolean = false) {
 
-  private val metadataCalls = new java.util.concurrent.atomic.AtomicInteger(0)
+  val metadataCalls = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // in-memory log: accepted produce batches with broker-assigned base
   // offsets, re-served by Fetch. Starts at a NONZERO offset (100 + p) so
@@ -435,8 +435,24 @@ class KafkaWireSpec extends AnyFunSuite {
         // the stale attempt hit A, the retried one landed on B
         assert(a.produced.size == 1 && b.produced.size == 1,
           s"A=${a.produced.size} B=${b.produced.size}")
+        // the refreshed leader is kept: the next send goes straight to B
+        cluster.send("changes", Seq(("k".getBytes, "v".getBytes, 2L)))
+        assert(a.produced.size == 1 && b.produced.size == 2)
+        assert(a.metadataCalls.get == 2, "one Metadata at the first send, one refresh")
       } finally cluster.close()
     } finally { a.stop(); b.stop() }
+  }
+
+  test("cluster client fetches Metadata once for its lifetime, not per send") {
+    val broker = new ScriptedKafkaBroker("changes", 3)
+    try {
+      val cluster = new KafkaWireCluster("127.0.0.1", broker.port)
+      try (1 to 5).foreach(i =>
+        cluster.send("changes", Seq((s"k$i".getBytes, "v".getBytes, i.toLong))))
+      finally cluster.close()
+      assert(broker.produced.size == 5)
+      assert(broker.metadataCalls.get == 1, s"${broker.metadataCalls.get} Metadata requests for 5 sends")
+    } finally broker.stop()
   }
 
   test("produce chunks record batches under maxBatchBytes") {

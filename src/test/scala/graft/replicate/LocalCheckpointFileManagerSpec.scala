@@ -1,14 +1,13 @@
 package graft.replicate
 
 import graft.SparkTestSession
-import graft.cdc.ReplicatePipeline
 import graft.sources.{InMemoryWal, InMemoryWalStream, WalRecord}
 import jdk.jfr.consumer.RecordingStream
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, Path, RawLocalFileSystem}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.net.URI
@@ -58,15 +57,15 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     val replicator = new Replicator(walId, spark, (s: SparkSession) => query(s))
 
     private def query(s: SparkSession): StreamingQuery =
-      ReplicatePipeline.startWithDeliveryReports(
-        InMemoryWalStream(s, walId),
-        writeBatch = (df, batchId) => {
+      InMemoryWalStream(s, walId).writeStream
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
           df.select("lsn").collect().foreach(r => lsns.add(r.getLong(0)))
           batches.add(batchId)
-        },
-        onError = (_, _) => (),
-        checkpointDir = ckpt,
-        triggerMs = 20L)
+          ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.ProcessingTime(20L))
+        .start()
 
     def append(n: Int): Unit =
       (0 until n).foreach { _ => InMemoryWal.append(walId, rec(next)); next += 1 }

@@ -116,9 +116,14 @@ class ScramSpec extends AnyFunSuite {
   * already holds when it opens. A change stream opens at "now", so only a
   * cursor opened with `resumeAfter` sees history: the events after its
   * token, ahead of the first batch.
+  *
+  * With `awaitMillis`, a getMore on a `tailable` cursor with nothing queued
+  * waits up to that long (capped by its `maxTimeMS`) for a [[push]], as a
+  * server's await-data cursor does.
   */
 class ScriptedMongod(batches: Seq[Seq[BDoc]], requireAuth: Boolean = false,
-    tailable: Boolean = false, history: Seq[BDoc] = Seq.empty) {
+    tailable: Boolean = false, history: Seq[BDoc] = Seq.empty,
+    awaitMillis: Long = 0L) {
   private val server = new ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
   val port: Int = server.getLocalPort
   val commands = new ConcurrentLinkedQueue[BDoc]()
@@ -128,10 +133,17 @@ class ScriptedMongod(batches: Seq[Seq[BDoc]], requireAuth: Boolean = false,
 
   /** Queue one more batch: events arriving while the cursor is open (a
     * `tailable` server keeps the cursor open on empty batches). */
-  def push(batch: Seq[BDoc]): Unit = synchronized { remaining = remaining :+ batch }
+  def push(batch: Seq[BDoc]): Unit = synchronized {
+    remaining = remaining :+ batch
+    notifyAll()
+  }
 
-  /** The next batch and the cursor id to reply with (0 = exhausted). */
-  private def nextBatch(): (Seq[BDoc], Long) = synchronized {
+  /** The next batch and the cursor id to reply with (0 = exhausted),
+    * waiting up to `waitMillis` on a tailable cursor with nothing queued. */
+  private def nextBatch(waitMillis: Long = 0L): (Seq[BDoc], Long) = synchronized {
+    val deadline = System.currentTimeMillis() + waitMillis
+    while (tailable && remaining.isEmpty && System.currentTimeMillis() < deadline)
+      wait(math.max(1L, deadline - System.currentTimeMillis()))
     val batch = remaining.headOption.getOrElse(Seq.empty)
     remaining = remaining.drop(1)
     (batch, if (remaining.nonEmpty || tailable) 9001L else 0L)
@@ -202,7 +214,8 @@ class ScriptedMongod(batches: Seq[Seq[BDoc]], requireAuth: Boolean = false,
               "ns" -> s"${cmd.str("$db").getOrElse("?")}.${cmd.str("aggregate").getOrElse("?")}",
               "firstBatch" -> BArr((replay ++ batch).toVector: _*))))
           case "getMore" =>
-            val (batch, cursorId) = nextBatch()
+            val (batch, cursorId) = nextBatch(
+              math.min(awaitMillis, cmd.int("maxTimeMS").getOrElse(0).toLong))
             reply(BDoc("ok" -> 1.0, "cursor" -> BDoc(
               "id" -> cursorId,
               "ns" -> "x.y",
@@ -319,6 +332,54 @@ class MongoSocketCursorSpec extends AnyFunSuite {
         assert(rows.map(_.getAs[String]("op")).toSet == Set("c", "u"))
         assert(rows.forall(_.getAs[String]("table") == "users"))
       } finally q.stop()
+    } finally {
+      ChangeStreamRegistry.clear(cid)
+      server.stop()
+    }
+  }
+
+  test("a steady stream does not hold the first batch until it goes quiet") {
+    // an await-data cursor while events keep arriving, one every 75 ms
+    val server = new ScriptedMongod(Seq.empty, tailable = true, awaitMillis = 1000L)
+    val cid = s"mongo-sock-steady-${System.nanoTime()}"
+    @volatile var pushing = true
+    val pusher = new Thread(() => {
+      (1 to 40).foreach { i =>
+        server.push(Seq(event(f"S$i%03d", "insert", s"n$i")))
+        Thread.sleep(75)
+      }
+      pushing = false
+    }, "mongod-pusher")
+    pusher.setDaemon(true)
+    try {
+      val spark = graft.SparkTestSession.spark
+      val q = spark.readStream
+        .format("graft.sources.TokenStreamProvider")
+        .option("stream.client", "graft.sources.ChangeStreamTokenClient")
+        .option("stream.cursor.id", cid)
+        .option("mongo.host", "127.0.0.1")
+        .option("mongo.port", server.port.toString)
+        .option("mongo.database", "appdb")
+        .option("mongo.collection", "users")
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("mongosock-steady").toString)
+        .start()
+      pusher.start()
+      try {
+        def rows = q.recentProgress.map(_.numInputRows).sum
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (rows == 0 && q.isActive && System.nanoTime() < deadline) Thread.sleep(10)
+        val pushingAtFirstCommit = pushing
+        assert(rows > 0, s"no batch committed (${q.exception})")
+        assert(pushingAtFirstCommit,
+          "the first batch committed only after the server stopped pushing")
+        pusher.join(30000L)
+        q.processAllAvailable()
+        assert(rows == 40, s"delivered $rows of 40 events")
+      } finally q.stop()
+      assert(server.failure == null, s"server failure: ${server.failure}")
     } finally {
       ChangeStreamRegistry.clear(cid)
       server.stop()

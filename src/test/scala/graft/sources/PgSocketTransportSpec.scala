@@ -15,11 +15,15 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
   * the LSN that START_REPLICATION asks for, and capture of
   * client standby status updates — the offline test bed for the socket
   * transport (the live half of S1 the other specs stub out).
+  *
+  * `frameGapMillis` paces the replication frames (a live slot under
+  * steady load); `streaming` stays true until the last one is sent.
   */
 class ScriptedPgServer(salt: Array[Byte],
     answers: String => ScriptedPgServer.Action,
     copyFrames: Seq[Array[Byte]],
-    authMode: String = "md5") {
+    authMode: String = "md5",
+    frameGapMillis: Long = 0L) {
   import ScriptedPgServer._
 
   private val server = new ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
@@ -27,6 +31,7 @@ class ScriptedPgServer(salt: Array[Byte],
   val queries = new ConcurrentLinkedQueue[String]()
   val standbyUpdates = new ConcurrentLinkedQueue[Array[Byte]]()
   val passwordSeen = new java.util.concurrent.atomic.AtomicReference[String]()
+  @volatile var streaming = true
   private val standbyLatch = new CountDownLatch(1)
   @volatile var failure: Throwable = _
 
@@ -126,7 +131,11 @@ class ScriptedPgServer(salt: Array[Byte],
               val from = "LOGICAL (\\S+)".r.findFirstMatchIn(sql)
                 .map(m => PgOutput.parseLsn(m.group(1))).getOrElse(0L)
               copyFrames.filter(f => f(0) != 'w' || ByteBuffer.wrap(f, 1, 8).getLong >= from)
-                .foreach(f => out.write(typedMessage('d', f)))
+                .foreach { f =>
+                  out.write(typedMessage('d', f))
+                  if (frameGapMillis > 0) { out.flush(); Thread.sleep(frameGapMillis) }
+                }
+              streaming = false
               copyMode = true
           }
           out.flush()
@@ -285,6 +294,54 @@ class PgSocketTransportSpec extends AnyFunSuite {
       PgTransports.clear(tid)
       server.stop()
     }
+  }
+
+  test("a steady stream does not hold the first batch until it goes quiet") {
+    // 40 single-row transactions, one every ~90 ms (3.6 s of traffic)
+    val txs = (0 until 40).map { i =>
+      val lsn = 0x5000L + i * 0x100L
+      Seq(Frames.xlog(lsn, Frames.begin(lsn + 0x80L, 3000000L, 20 + i)),
+        Frames.xlog(lsn + 1, Frames.insert(16384, Seq(('t', i.toString), ('t', "1"), ('t', "n")))),
+        Frames.xlog(lsn + 2, Frames.commit(lsn + 0x80L, lsn + 0x81L, 3000000L)))
+    }
+    val server = new ScriptedPgServer(salt, stdAnswers(pubExists = true, slotExists = true),
+      Frames.xlog(0x4FFFL, Frames.usersRel) +: txs.flatten, frameGapMillis = 30L)
+    val tid = s"socket-steady-${System.nanoTime()}"
+    val spark = graft.SparkTestSession.spark
+    try {
+      val q = spark.readStream
+        .format("graft.sources.CdcSourceProvider")
+        .option("wal.client", "graft.sources.PgOutputWalClient")
+        .option("pg.transport.id", tid)
+        .option("pg.database", "appdb")
+        .option("pg.host", "127.0.0.1")
+        .option("pg.port", server.port.toString)
+        .option("pg.user", "alice")
+        .option("pg.password", "secret")
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("pgsock-steady").toString)
+        .start()
+      try {
+        def rows = q.recentProgress.map(_.numInputRows).sum
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (rows == 0 && q.isActive && System.nanoTime() < deadline) Thread.sleep(10)
+        val streamingAtFirstCommit = server.streaming
+        assert(rows > 0, s"no batch committed (${q.exception})")
+        assert(streamingAtFirstCommit,
+          "the first batch committed only after the server stopped streaming")
+        while (server.streaming && System.nanoTime() < deadline) Thread.sleep(10)
+        q.processAllAvailable()
+        assert(rows == 40, s"delivered $rows of 40 changes")
+        assert(q.recentProgress.count(_.numInputRows > 0) > 1,
+          "the stream ran in more than one batch")
+      } finally q.stop()
+    } finally {
+      PgTransports.clear(tid)
+      server.stop()
+    }
+    assert(server.failure == null, s"server-side failure: ${server.failure}")
   }
 
   test("SCRAM-SHA-256 SASL auth (the PG default) against an independent vector") {
