@@ -59,20 +59,22 @@ object KafkaWire {
   def writeLong(out: ByteArrayOutputStream, v: Long): Unit =
     out.write(ByteBuffer.allocate(8).putLong(v).array())
 
-  /** Zigzag varint (protobuf encoding, as the record format specifies). */
-  def writeVarint(out: ByteArrayOutputStream, v: Int): Unit =
-    writeUnsignedVarlong(out, ((v << 1) ^ (v >> 31)).toLong & 0xFFFFFFFFL)
-
-  def writeVarlong(out: ByteArrayOutputStream, v: Long): Unit =
-    writeUnsignedVarlong(out, (v << 1) ^ (v >> 63))
-
-  private def writeUnsignedVarlong(out: ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7FL) != 0L) {
-      out.write(((v & 0x7F) | 0x80).toInt)
-      v >>>= 7
+  /** Zigzag varlong (protobuf encoding, as the record format specifies).
+    * An Int widened to Long encodes to the same bytes as its zigzag
+    * varint, so this one writer serves both. */
+  def writeVarlong(buf: ByteBuffer, v: Long): Unit = {
+    var z = (v << 1) ^ (v >> 63)
+    while ((z & ~0x7FL) != 0L) {
+      buf.put(((z & 0x7F) | 0x80).toByte)
+      z >>>= 7
     }
-    out.write(v.toInt)
+    buf.put(z.toByte)
+  }
+
+  /** Bytes [[writeVarlong]] writes for `v`. */
+  def varlongSize(v: Long): Int = {
+    val z = (v << 1) ^ (v >> 63)
+    (64 - java.lang.Long.numberOfLeadingZeros(z | 1L) + 6) / 7
   }
 
   def readVarint(buf: ByteBuffer): Int = {
@@ -122,52 +124,80 @@ object KafkaWire {
   case class Record(key: Option[Array[Byte]], value: Array[Byte],
       timestampMs: Long)
 
+  /** Offset of the CRC field, and of the attributes field where the CRC'd
+    * span starts: baseOffset(8) + batchLength(4) + partitionLeaderEpoch(4)
+    * + magic(1), then crc(4). */
+  private val CrcAt = 17
+  private val CrcFrom = 21
+  /** Header bytes before the first record: CrcFrom + attributes(2) +
+    * lastOffsetDelta(4) + first/max timestamp(16) + producerId(8) +
+    * producerEpoch(2) + baseSequence(4) + record count(4). */
+  private val HeaderBytes = CrcFrom + 40
+
   /** RecordBatch v2 (magic 2): batch header + zigzag-varint records, CRC32C
     * over attributes..end (the store format, so `acks=1` appends verbatim).
+    * Encoded in two passes: the first sizes every record, the second
+    * writes the batch into one array of exactly that size.
     */
   def recordBatch(records: Seq[Record]): Array[Byte] = {
     require(records.nonEmpty, "empty record batch")
-    val baseTs = records.map(_.timestampMs).min
-    val maxTs = records.map(_.timestampMs).max
-
-    val body = new ByteArrayOutputStream() // attributes .. records
-    writeShort(body, 0) // attributes: no compression, create-time
-    writeInt(body, records.size - 1) // lastOffsetDelta
-    writeLong(body, baseTs)
-    writeLong(body, maxTs)
-    writeLong(body, -1L) // producerId (idempotence off, reference parity)
-    writeShort(body, -1) // producerEpoch
-    writeInt(body, -1) // baseSequence
-    writeInt(body, records.size)
-    records.zipWithIndex.foreach { case (r, i) =>
-      val rec = new ByteArrayOutputStream()
-      rec.write(0) // record attributes
-      writeVarlong(rec, r.timestampMs - baseTs)
-      writeVarint(rec, i) // offsetDelta
-      r.key match {
-        case Some(k) => writeVarint(rec, k.length); rec.write(k)
-        case None => writeVarint(rec, -1)
-      }
-      writeVarint(rec, r.value.length)
-      rec.write(r.value)
-      writeVarint(rec, 0) // headers
-      val recBytes = rec.toByteArray
-      writeVarint(body, recBytes.length)
-      body.write(recBytes)
+    val n = records.size
+    var baseTs = Long.MaxValue
+    var maxTs = Long.MinValue
+    records.foreach { r =>
+      baseTs = math.min(baseTs, r.timestampMs)
+      maxTs = math.max(maxTs, r.timestampMs)
     }
-    val bodyBytes = body.toByteArray
+    // record body: attributes, timestamp delta, offset delta, key, value,
+    // header count (0, one byte)
+    val recLens = new Array[Int](n)
+    var total = HeaderBytes
+    var i = 0
+    records.foreach { r =>
+      val keyLen = r.key.fold(-1)(_.length)
+      val len = 1 + varlongSize(r.timestampMs - baseTs) + varlongSize(i) +
+        varlongSize(keyLen) + math.max(keyLen, 0) +
+        varlongSize(r.value.length) + r.value.length + 1
+      recLens(i) = len
+      total += varlongSize(len) + len
+      i += 1
+    }
+
+    val bytes = new Array[Byte](total)
+    val buf = ByteBuffer.wrap(bytes)
+    buf.putLong(0L) // baseOffset (broker reassigns)
+    buf.putInt(total - 12) // batchLength: everything after this field
+    buf.putInt(-1) // partitionLeaderEpoch
+    buf.put(2: Byte) // magic
+    buf.putInt(0) // crc, filled in below
+    buf.putShort(0) // attributes: no compression, create-time
+    buf.putInt(n - 1) // lastOffsetDelta
+    buf.putLong(baseTs)
+    buf.putLong(maxTs)
+    buf.putLong(-1L) // producerId (idempotence off, reference parity)
+    buf.putShort(-1) // producerEpoch
+    buf.putInt(-1) // baseSequence
+    buf.putInt(n)
+    i = 0
+    records.foreach { r =>
+      writeVarlong(buf, recLens(i))
+      buf.put(0: Byte) // record attributes
+      writeVarlong(buf, r.timestampMs - baseTs)
+      writeVarlong(buf, i) // offsetDelta
+      r.key match {
+        case Some(k) => writeVarlong(buf, k.length); buf.put(k)
+        case None => writeVarlong(buf, -1)
+      }
+      writeVarlong(buf, r.value.length)
+      buf.put(r.value)
+      buf.put(0: Byte) // headers
+      i += 1
+    }
 
     val crc = new CRC32C()
-    crc.update(bodyBytes)
-
-    val out = new ByteArrayOutputStream()
-    writeLong(out, 0L) // baseOffset (broker reassigns)
-    writeInt(out, 4 + 1 + 4 + bodyBytes.length) // partitionLeaderEpoch+magic+crc+body
-    writeInt(out, -1) // partitionLeaderEpoch
-    out.write(2) // magic
-    writeInt(out, crc.getValue.toInt)
-    out.write(bodyBytes)
-    out.toByteArray
+    crc.update(bytes, CrcFrom, total - CrcFrom)
+    buf.putInt(CrcAt, crc.getValue.toInt)
+    bytes
   }
 
   /** A record as fetched from the log: its absolute offset

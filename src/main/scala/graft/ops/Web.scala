@@ -105,19 +105,6 @@ object Web {
   def registrableDomainPsl(host: Column, pslText: String): Column =
     graft.functions.registrable_domain_psl(host, pslText)
 
-  /** Read a Public Suffix List file through the Hadoop filesystem (so
-    * file://, hdfs:// and s3a:// all work) for [[registrableDomainPsl]].
-    */
-  def loadPublicSuffixList(spark: org.apache.spark.sql.SparkSession,
-      path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   /** Canonical URL: scheme+host lowercased, default port dropped
     * (443/https, 80/http), fragment dropped, tracking params removed
     * (`utm_*`, `fbclid`, `gclid`), remaining query params SORTED so

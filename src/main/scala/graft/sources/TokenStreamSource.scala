@@ -121,6 +121,7 @@ object TokenStreamClients {
 
 class TokenMicroBatchStream(options: Map[String, String]) extends MicroBatchStream {
   private val client = TokenStreamClients.instantiate(options)
+  private val groups = new CdcRows.PlannedGroups[(String, String)]
 
   /** First-start position (no-checkpoint case only): `earliest` (default)
     * replays the whole log the client can serve; `latest` = new events
@@ -143,19 +144,22 @@ class TokenMicroBatchStream(options: Map[String, String]) extends MicroBatchStre
   }
   override def stop(): Unit = ()
 
+  /** One input partition per relation group ([[CdcRows.groupRelations]]:
+    * a single one unless the batch is large). */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[TokenOffset].token
     val to = end.asInstanceOf[TokenOffset].token
     if (to.isEmpty || from == to) Array.empty
-    else Array(TokenInputPartition(from, to, options))
+    else groups((from, to))(client.readAfter(Option(from).filter(_.nonEmpty), to))
+      .map(TokenInputPartition(from, to, _, options)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
       override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
         val p = partition.asInstanceOf[TokenInputPartition]
-        val it = TokenStreamClients.instantiate(p.options)
-          .readAfter(if (p.from.isEmpty) None else Some(p.from), p.to)
+        val it = CdcRows.keep(TokenStreamClients.instantiate(p.options)
+          .readAfter(Option(p.from).filter(_.nonEmpty), p.to), p.relations)
         new PartitionReader[InternalRow] {
           private var cur: WalRecord = _
           override def next(): Boolean =
@@ -167,5 +171,7 @@ class TokenMicroBatchStream(options: Map[String, String]) extends MicroBatchStre
     }
 }
 
-case class TokenInputPartition(from: String, to: String,
+/** The events after `from` ("" = the beginning) up to `to` of the
+  * relations in `relations` (empty = every relation). */
+case class TokenInputPartition(from: String, to: String, relations: Set[String],
     options: Map[String, String]) extends InputPartition

@@ -89,7 +89,8 @@ class KafkaSinkSpec extends AnyFunSuite {
     val walId = "kafka-chunks"
     InMemoryWal.clear(walId)
     // 2400 changes over 8 keys, ~1.3 KB envelopes: ~3 MB in one micro-batch
-    // partition (the CDC source plans one), over three chunks' worth
+    // (two tasks of four relations each, ~1.5 MB apiece), over three
+    // chunks' worth
     val pad = "x" * 1000
     val n = 2400
     (1 to n).foreach { i =>

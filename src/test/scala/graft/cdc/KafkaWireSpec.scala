@@ -285,18 +285,16 @@ class KafkaWireSpec extends AnyFunSuite {
   test("varint/varlong zigzag round-trips the int/long edges") {
     val ints = Seq(0, 1, -1, 63, 64, -64, -65, 300, -300,
       Int.MaxValue, Int.MinValue)
-    ints.foreach { v =>
-      val out = new ByteArrayOutputStream()
-      writeVarint(out, v)
-      assert(readVarint(ByteBuffer.wrap(out.toByteArray)) == v, s"varint $v")
+    def encoded(v: Long): ByteBuffer = {
+      val buf = ByteBuffer.allocate(10)
+      writeVarlong(buf, v)
+      assert(buf.position() == varlongSize(v), s"size of $v")
+      buf.flip()
     }
+    ints.foreach(v => assert(readVarint(encoded(v)) == v, s"varint $v"))
     val longs = Seq(0L, 1L, -1L, 1234567890123L, -1234567890123L,
       Long.MaxValue, Long.MinValue)
-    longs.foreach { v =>
-      val out = new ByteArrayOutputStream()
-      writeVarlong(out, v)
-      assert(readVarlong(ByteBuffer.wrap(out.toByteArray)) == v, s"varlong $v")
-    }
+    longs.foreach(v => assert(readVarlong(encoded(v)) == v, s"varlong $v"))
   }
 
   test("record batch v2 round-trips through its own decoder with CRC intact") {
@@ -319,6 +317,35 @@ class KafkaWireSpec extends AnyFunSuite {
     corrupt(corrupt.length - 1) = (corrupt(corrupt.length - 1) ^ 0x01).toByte
     val e = intercept[IllegalArgumentException](decodeRecordBatch(corrupt))
     assert(e.getMessage.contains("CRC"))
+  }
+
+  test("record batch v2 bytes match the golden encoding") {
+    // multi-byte varints (a 139-byte value, so its length and the record's
+    // take two bytes), a keyless record, an empty value, a timestamp below
+    // the first record's (baseTimestamp is the minimum) and a 9999 ms delta
+    val pad = "x" * 120
+    val small = recordBatch(Seq(
+      Record(Some("appdb.public.users".getBytes(StandardCharsets.UTF_8)),
+        s"""{"id":"1","pad":"$pad"}""".getBytes(StandardCharsets.UTF_8), 1700000000123L),
+      Record(None, "v2-no-key".getBytes(StandardCharsets.UTF_8), 1700000000000L),
+      Record(Some("k3".getBytes(StandardCharsets.UTF_8)), Array.emptyByteArray, 1700000009999L)))
+    val hex = small.map(b => f"${b & 0xff}%02x").mkString
+    assert(hex ==
+      "0000000000000000000000f3ffffffff0295af39380000000000020000018bcf" +
+      "e568000000018bcfe58f0fffffffffffffffffffffffffffff00000003ca0200" +
+      "f601002461707064622e7075626c69632e757365727396027b226964223a2231" +
+      "222c22706164223a227878787878787878787878787878787878787878787878" +
+      "7878787878787878787878787878787878787878787878787878787878787878" +
+      "7878787878787878787878787878787878787878787878787878787878787878" +
+      "7878787878787878787878787878787878787878787878787878787878787878" +
+      "78227d001e000002011276322d6e6f2d6b65790014009e9c0104046b330000")
+    // offset deltas past 63 take two varint bytes
+    val many = recordBatch((0 until 70).map(i => Record(Some(s"k$i".getBytes(StandardCharsets.UTF_8)),
+      s"v$i".getBytes(StandardCharsets.UTF_8), 1700000000000L + i * 1000L)))
+    val sha = java.security.MessageDigest.getInstance("SHA-256").digest(many)
+      .map(b => f"${b & 0xff}%02x").mkString
+    assert((many.length, sha) ==
+      ((1087, "a32cedaf1d4d095c2fe0561c51630932a0745df80f9b278d2afa18de63d0c38f")))
   }
 
   test("produce end-to-end through a real socket: partitioning, framing, offsets") {
